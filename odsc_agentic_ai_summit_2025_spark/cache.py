@@ -280,3 +280,38 @@ def sweep_blocks(spark, keep: frozenset | set | tuple = ()) -> None:
                 if not hasattr(h, "_jdf"):
                     release_frame(h)
     _prune()
+
+
+# Driver memory any one driver-side solve (connected components,
+# triangles, PageRank, the LSH verify gather) may hold: its collected
+# arrays plus the numpy working set built from them.
+DRIVER_BUDGET_BYTES = 64 << 20
+
+
+def fits_driver_budget(footprint_bytes: int, budget_bytes: int) -> bool:
+    """True when a solve of this footprint runs on the driver. A
+    budget of 0 forces the distributed (reference) path."""
+    return budget_bytes > 0 and footprint_bytes <= budget_bytes
+
+
+def driver_arrays(
+    df: DataFrame, footprint_bytes: int, budget_bytes: int
+) -> dict | None:
+    """``df`` collected as one numpy array per column — an
+    ``(n, dim)`` float64 matrix for a list column — or ``None`` when
+    the footprint does not fit (take the distributed path). Arrow
+    buffers, no Python object per row: a ``collect()`` of 1M edge
+    rows took ~90× the time and ~20× the memory."""
+    if not fits_driver_budget(footprint_bytes, budget_bytes):
+        return None
+    import pyarrow as pa
+
+    from .functions import arrowkit as ak
+
+    tbl = df.toArrow()
+    return {
+        name: ak.fixed_matrix(col)
+        if pa.types.is_list(col.type)
+        else col.to_numpy()
+        for name, col in zip(tbl.column_names, tbl.columns)
+    }

@@ -43,7 +43,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import DRIVER_BUDGET_BYTES, driver_arrays, fits_driver_budget
 from ..cache import own, release_frame
+
+# Driver bytes per collected edge row of the graph solves: 16 B of
+# endpoints plus the numpy working arrays (tracemalloc peaks 98-115 B
+# per row on random, dense and dedup-shaped graphs); triangles add
+# their wedge expansion (60-68 B per wedge measured).
+_EDGE_ROW_BYTES = 16 + 120
+_WEDGE_BYTES = 68
 
 
 def connected_components(
@@ -54,7 +62,7 @@ def connected_components(
     id_col: str = "id",
     max_iterations: int = 25,
     algorithm: str = "auto",
-    driver_max_edges: int | None = None,
+    driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """[a, b] edge pairs → [id, cluster_id] with cluster_id = the
     minimum id reachable from ``id``.
@@ -68,23 +76,22 @@ def connected_components(
     via :mod:`..cache` — call ``cache.release(result)`` after the
     consuming action in long-lived sessions.
 
-    ``driver_max_edges`` (``auto`` only; default from
-    ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``, 0 disables): when the
-    DISTINCT symmetric edge set fits under this bound, the component
-    labels are solved on the driver in one vectorized numpy pass over
-    the collected edge list instead of the iterative join loop — the
-    same decision a planner makes when it broadcasts a small join
-    side (guide §1.2: choose the algorithm by the data). The dedup
-    graphs this operator sees are post-shuffle CANDIDATE graphs —
-    bounded by banding/trim guards, orders of magnitude smaller than
-    the corpus — so even at 100 TB they are usually driver-sized;
-    each fixpoint round otherwise costs 2-3 job barriers whose
-    driver-side latency dominates at any scale (measured r13: q66
-    wall 4.1 s vs 2.3 s of job time across 49 jobs). Labels are the
-    identical component-minimum ids (property-tested against the
-    distributed loop), the edge list is evaluated exactly once (the
-    same persist the loop uses), and graphs over the bound take the
-    loop unchanged.
+    ``driver_budget_bytes`` (``auto`` only, 0 disables): when the
+    DISTINCT symmetric edge set's footprint (``_EDGE_ROW_BYTES`` per
+    row) fits, the component labels are solved on the driver in one
+    vectorized numpy pass over the collected edge list instead of the
+    iterative join loop — the same decision a planner makes when it
+    broadcasts a small join side (guide §1.2: choose the algorithm by
+    the data). The dedup graphs this operator sees are post-shuffle
+    CANDIDATE graphs — bounded by banding/trim guards, orders of
+    magnitude smaller than the corpus — so even at 100 TB they are
+    usually driver-sized; each fixpoint round otherwise costs 2-3 job
+    barriers whose driver-side latency dominates at any scale
+    (measured r13: q66 wall 4.1 s vs 2.3 s of job time across 49
+    jobs). Labels are the identical component-minimum ids
+    (property-tested against the distributed loop), the edge list is
+    evaluated exactly once (the same persist the loop uses), and
+    graphs over the budget take the loop unchanged.
     """
     if algorithm not in ("auto", "minlabel", "star"):
         raise ValueError(f"unknown algorithm: {algorithm!r}")
@@ -121,18 +128,15 @@ def connected_components(
             _star_components(edges, nodes, id_col, max_iterations), pairs
         )
     edges = edges.persist()
-    if driver_max_edges is None:
-        import os
-
-        driver_max_edges = int(
-            os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "4000000")
-        )
-    if algorithm == "auto" and driver_max_edges > 0:
+    if algorithm == "auto":
         # the count materializes the same persist the loop would (the
-        # generator runs exactly once either way); the collect below
-        # then reads cached blocks
-        if edges.count() <= driver_max_edges:
-            out = _driver_components(edges, nodes, id_col)
+        # generator runs exactly once either way); the collect then
+        # reads cached blocks
+        arrays = driver_arrays(
+            edges, edges.count() * _EDGE_ROW_BYTES, driver_budget_bytes
+        )
+        if arrays is not None:
+            out = _driver_components(arrays, edges, nodes, id_col)
             # the edge cache backs the output plan's `nodes` scan —
             # it rides the result and frees with cache.release
             return own(out, edges, pairs)
@@ -322,10 +326,10 @@ def connected_components(
 
 
 def _driver_components(
-    edges: DataFrame, nodes: DataFrame, id_col: str
+    arrays: dict, edges: DataFrame, nodes: DataFrame, id_col: str
 ) -> DataFrame:
     """Driver-solved components for a bounded DISTINCT edge list:
-    collect the (already persisted) edges, run vectorized min-label
+    over its collected endpoint arrays, run vectorized min-label
     propagation + full pointer-jump compression over index-compressed
     numpy arrays, and LEFT-join the resulting (endpoint, min-id)
     table back onto the vertex set — isolated vertices keep their own
@@ -340,13 +344,11 @@ def _driver_components(
     """
     import numpy as np
 
-    rows = edges.collect()
     spark = edges.sparkSession
     id_type = edges.schema["src"].dataType.simpleString()
     small_schema = f"{id_col} {id_type}, cluster_id {id_type}"
-    if rows:
-        src = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-        dst = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
+    src, dst = arrays["src"], arrays["dst"]
+    if len(src):
         uniq, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
         s, d = inv[: len(src)], inv[len(src):]
         lab = np.arange(len(uniq), dtype=np.int64)
@@ -363,8 +365,8 @@ def _driver_components(
             if np.array_equal(nm, prev):
                 break
             lab = nm
-        # emit via pandas: near the edge cap the endpoint table is
-        # millions of rows, and the Arrow path (enabled in the engine
+        # emit via pandas: near the budget the endpoint table is
+        # ~10^5 rows, and the Arrow path (enabled in the engine
         # session) ships the two int64 buffers directly instead of
         # serializing one Python tuple per row
         import pandas as pd
@@ -589,25 +591,8 @@ def quality_representatives(
     )
 
 
-def _graph_driver_max_edges(override: int | None) -> int:
-    """Shared cap for the graph-analytics driver fast paths (triangle
-    counts, fixed-point PageRank) — the same decision class as
-    ``connected_components``'s ``driver_max_edges``: a candidate-pair
-    graph small enough to collect is solved on the driver in one
-    vectorized numpy pass instead of a multi-stage shuffle ladder
-    whose per-job driver latency dominates at any scale. 0 disables
-    (distributed path only)."""
-    if override is not None:
-        return override
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_MAX_EDGES", "2000000")
-    )
-
-
 def _driver_triangle_counts(
-    edge_rows: list, nodes: DataFrame, wedge_cap: int = 64_000_000
+    arrays: dict, nodes: DataFrame, budget_bytes: int
 ) -> DataFrame | None:
     """Driver-solved per-vertex triangle counts for a bounded pair
     list: an ENTRY-level numpy replication of the distributed
@@ -619,9 +604,10 @@ def _driver_triangle_counts(
     vertex set stays distributed and the output plan is lazy and
     vertex-sized (broadcast LEFT-join back, zero-fill).
 
-    Returns ``None`` when the wedge budget (Σ per-source out-pairs)
-    exceeds ``wedge_cap`` — the signal that the quadratic wedge
-    expansion wants the distributed join after all.
+    Returns ``None`` when the edge arrays plus the wedge working set
+    (Σ per-source out-pairs, ``_WEDGE_BYTES`` each) exceed
+    ``budget_bytes`` — the signal that the quadratic wedge expansion
+    wants the distributed join after all.
     """
     import numpy as np
     import pandas as pd
@@ -629,10 +615,9 @@ def _driver_triangle_counts(
     spark = nodes.sparkSession
     id_type = nodes.schema["id"].dataType.simpleString()
     small_schema = f"id {id_type}, n_triangles long"
-    if edge_rows:
-        m = len(edge_rows)
-        a = np.fromiter((r[0] for r in edge_rows), np.int64, count=m)
-        b = np.fromiter((r[1] for r in edge_rows), np.int64, count=m)
+    a, b = arrays["a"], arrays["b"]
+    m = len(a)
+    if m:
         uniq, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
         ai, bi = inv[:m], inv[m:]
         nv = len(uniq)
@@ -659,7 +644,9 @@ def _driver_triangle_counts(
         )
         loc = np.arange(m) - gstart  # 0-based index within the group
         W = int(loc.sum())  # Σ k·(k−1)/2 over groups
-        if W > wedge_cap:
+        if not fits_driver_budget(
+            m * _EDGE_ROW_BYTES + W * _WEDGE_BYTES, budget_bytes
+        ):
             return None
         if W:
             cum = np.concatenate(([0], np.cumsum(loc)))
@@ -704,7 +691,7 @@ def _driver_triangle_counts(
 def triangle_counts(
     pairs: DataFrame,
     vertices: DataFrame,
-    driver_max_edges: int | None = None,
+    driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """Per-vertex triangle participation over an undirected pair list
     (``a_id < b_id``) — the clustering-coefficient numerator, and for
@@ -735,26 +722,26 @@ def triangle_counts(
     (caught by bench.py's r10 self-adjudication: q90 2.6→12 s).
     Released via ``cache.release(result)``.
 
-    ``driver_max_edges`` (default from
-    ``SPARK_GRAFT_GRAPH_DRIVER_MAX_EDGES``, 0 disables): when the
-    pair list fits under the cap AND the wedge expansion fits the
-    driver budget, the counts are solved on the driver in one
-    vectorized numpy pass (``_driver_triangle_counts`` — an exact
-    entry-level replication of this wedge join) instead of the
-    5-shuffle ladder, whose per-job driver latency dominates at
+    ``driver_budget_bytes`` (0 disables): when the collected pair list
+    (``_EDGE_ROW_BYTES`` per row) plus its wedge working set
+    (``_WEDGE_BYTES`` per wedge) fit, the counts are solved on the
+    driver in one vectorized numpy pass (``_driver_triangle_counts``
+    — an exact entry-level replication of this wedge join) instead of
+    the 5-shuffle ladder, whose per-job driver latency dominates at
     candidate-graph sizes (same §5 bounded-driver-work class as
     ``connected_components``). The count that gates it materializes
-    the same persist the degree pass would; over-cap graphs take the
-    join ladder unchanged.
+    the same persist the degree pass would; over-budget graphs take
+    the join ladder unchanged.
     """
     e = pairs.select(
         F.col("a_id").alias("a"), F.col("b_id").alias("b")
     ).persist()
-    cap = _graph_driver_max_edges(driver_max_edges)
-    if cap > 0 and e.count() <= cap:
+    arrays = driver_arrays(e, e.count() * _EDGE_ROW_BYTES, driver_budget_bytes)
+    if arrays is not None:
         out = _driver_triangle_counts(
-            e.collect(),
+            arrays,
             vertices.select(F.col("id")).distinct(),
+            driver_budget_bytes,
         )
         if out is not None:
             # the edge cache backs nothing in the output plan, but it
@@ -828,7 +815,7 @@ def triangle_counts(
 
 
 def _driver_pagerank(
-    sym_rows: list,
+    arrays: dict,
     verts: DataFrame,
     base: int,
     teleport: int,
@@ -851,10 +838,9 @@ def _driver_pagerank(
     spark = verts.sparkSession
     id_type = verts.schema["id"].dataType.simpleString()
     small_schema = f"id {id_type}, _pr long"
-    if sym_rows:
-        m = len(sym_rows)
-        s_raw = np.fromiter((r[0] for r in sym_rows), np.int64, count=m)
-        d_raw = np.fromiter((r[1] for r in sym_rows), np.int64, count=m)
+    s_raw, d_raw = arrays["src"], arrays["dst"]
+    m = len(s_raw)
+    if m:
         uniq, inv = np.unique(
             np.concatenate([s_raw, d_raw]), return_inverse=True
         )
@@ -867,13 +853,8 @@ def _driver_pagerank(
         ep = spark.createDataFrame(
             pd.DataFrame({"id": uniq}), f"id {id_type}"
         )
-        member = {
-            r[0]
-            for r in verts.join(F.broadcast(ep), "id", "left_semi").collect()
-        }
-        in_verts = np.fromiter(
-            (int(u) in member for u in uniq), dtype=bool, count=nv
-        )
+        member = verts.join(F.broadcast(ep), "id", "left_semi").toArrow()
+        in_verts = np.isin(uniq, member.column("id").to_numpy())
         deg = np.bincount(s, minlength=nv).astype(np.int64)
         pr = np.full(nv, base, dtype=np.int64)
         src_mask = in_verts[s]
@@ -903,7 +884,7 @@ def pagerank_fixed(
     iterations: int = 3,
     scale: int = 10**9,
     checkpoint_every: int | None = None,
-    driver_max_edges: int | None = None,
+    driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """Exact-integer PageRank over the symmetric closure of an
     undirected pair list: ``iterations`` unrolled power steps in e9
@@ -931,6 +912,11 @@ def pagerank_fixed(
     frees them; as with every localCheckpoint, the released result is
     dead afterwards (release only after materializing).
 
+    ``driver_budget_bytes`` (0 disables): when the symmetric edge
+    list (``_EDGE_ROW_BYTES`` per row) fits, the steps run on the
+    driver in one bit-identical int64 numpy pass instead of
+    ``iterations`` chained join+agg shuffle stages.
+
     Output: ``[id, pr_e9]``.
     """
     # persisted: the edge list is consumed by the degree table AND by
@@ -951,17 +937,13 @@ def pagerank_fixed(
     n = verts.count()
     base = int(scale) // max(n, 1)
     teleport = (15 * base) // 100
-    # Driver fast path (guide §5 bounded driver work, §1.2 fewer job
-    # barriers — the connected_components precedent): a candidate-pair
-    # graph under the cap is solved in one vectorized int64 numpy pass
-    # instead of `iterations` chained join+agg shuffle stages. The
-    # count materializes the same persist the degree table would; the
-    # collected rows are the symmetric closure (2 per pair).
-    cap = _graph_driver_max_edges(driver_max_edges)
-    if cap > 0 and sym.count() <= 2 * cap:
-        out = _driver_pagerank(
-            sym.collect(), verts, base, teleport, iterations
-        )
+    # Driver fast path (guide §5, §1.2): the count materializes the
+    # same persist the degree table would; 2 collected rows per pair.
+    arrays = driver_arrays(
+        sym, sym.count() * _EDGE_ROW_BYTES, driver_budget_bytes
+    )
+    if arrays is not None:
+        out = _driver_pagerank(arrays, verts, base, teleport, iterations)
         return own(out, sym, verts, pairs, vertices)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     pr = verts.select("id", F.lit(base).cast("long").alias("pr_e9"))

@@ -23,7 +23,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import own
+from ..cache import DRIVER_BUDGET_BYTES, driver_arrays, own
 
 
 def _lsh_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -427,7 +427,7 @@ def neardup_pairs_lsh(
     planes_per_table: int | None = None,
     seed: int = 101,
     max_bucket: int = 4096,
-    verify_broadcast_bytes: int | None = None,
+    driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """Approximate near-dup pairs via banded hyperplane LSH with EXACT
     verification — the 100 TB path for high-threshold near-duplicate
@@ -464,6 +464,10 @@ def neardup_pairs_lsh(
     magnitude, while verification still uses the RAW cosine so
     precision is untouched.
 
+    ``driver_budget_bytes`` (0 disables): when the float64 vector
+    matrix (``total·dim·8`` bytes) fits, verification gathers vectors
+    from one broadcast matrix instead of joining them onto each pair.
+
     Planes are deterministic per (seed, table), so the candidate set
     — hence the output — is reproducible run-to-run.
 
@@ -476,8 +480,6 @@ def neardup_pairs_lsh(
     materializing.
     """
     import numpy as np
-    import pandas as pd  # noqa: F401
-
     from pyspark import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -601,25 +603,19 @@ def neardup_pairs_lsh(
     # ~1 GB through the exchange and the Arrow boundary where the
     # distinct id-pair stream is ~16 MB (measured: q63's verify job
     # was 11.6 CPU-s, 15.7 MB shuffled pre-join → 1.6 s wall). Under
-    # the cap (total·dim·8 from the mean pass — no extra job;
-    # SPARK_GRAFT_LSH_VERIFY_BCAST_MB, default 64, 0 disables) the
-    # kernel gathers rows from one task-local broadcast matrix by
-    # searchsorted id lookup; the per-row normalize + dot is the
-    # SAME float64 arithmetic in the same order, so results are
+    # the driver budget (total·dim·8 from the mean pass — no extra
+    # job) the kernel gathers rows from one task-local broadcast
+    # matrix by searchsorted id lookup; the per-row normalize + dot is
+    # the SAME float64 arithmetic in the same order, so results are
     # bit-identical (pinned by test against the join path). Over the
-    # cap — the 100 TB corpus — the join path runs unchanged: a
+    # budget — the 100 TB corpus — the join path runs unchanged: a
     # corpus-sized vector table must move by hash join, exactly like
     # an over-threshold broadcast join side.
-    if verify_broadcast_bytes is None:
-        import os
-
-        verify_broadcast_bytes = int(
-            os.environ.get("SPARK_GRAFT_LSH_VERIFY_BCAST_MB", "64")
-        ) * (1 << 20)
-    if 0 < total * dim * 8 <= verify_broadcast_bytes:
-        rows = df.select(id_col, vec_col).collect()  # reads the persist
-        ids = np.fromiter((r[0] for r in rows), np.int64, count=len(rows))
-        mat = np.asarray([r[1] for r in rows], dtype=np.float64)
+    arrays = driver_arrays(  # reads the persist
+        df.select(id_col, vec_col), total * dim * 8, driver_budget_bytes
+    )
+    if arrays is not None:
+        ids, mat = arrays[id_col], arrays[vec_col]
         order = np.argsort(ids)
         bcv = df.sparkSession.sparkContext.broadcast(
             (ids[order], mat[order])

@@ -28,7 +28,7 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -52,16 +52,12 @@ def get_spark(
         # default AT OR BETTER on every cell the 1 MB setting was
         # meant to help (q63 5.04 vs 5.40, q82 2.78 vs 3.55, q38/q78/
         # q97/q100 flat) and equal on the q101/tiny-query set — so the
-        # scale-safe stock default ships, and the local-profile
-        # escape hatches stay env-tunable for future A/Bs.
+        # scale-safe stock default ships. A/B other values through
+        # ``extra_conf`` (scripts/ab_conf.py --conf).
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
         )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_MB", "64") + "m",
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -73,16 +69,11 @@ def get_spark(
         # (measured: a kNN query after an IVF query went 5 s → 15-36 s;
         # reuse=false removes the stall for a ~100 ms/task fork cost,
         # noise for the seconds-long kernel tasks this engine runs).
-        # Env-tunable since r14 so the reuse=true + idle-timeout
-        # combination (Spark 4's idleTimeoutSeconds/killOnIdleTimeout
-        # retire stale pool workers — the stall's suspected cause) can
-        # be soaked against the kNN-after-IVF repro without editing
-        # code; the default stays false until a soak longer than the
-        # r13 3-round probe clears it (see OPTIMIZATION_r14.md).
-        .config(
-            "spark.python.worker.reuse",
-            os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"),
-        )
+        # It stays false until a soak of reuse=true + the idle timeout
+        # below (Spark 4 retires stale pool workers — the stall's
+        # suspected cause) clears the kNN-after-IVF repro; soak it
+        # through ``extra_conf`` (see OPTIMIZATION_r14.md).
+        .config("spark.python.worker.reuse", "false")
         .config("spark.python.worker.idleTimeoutSeconds", "30")
         .config("spark.python.worker.killOnIdleTimeout", "true")
     )

@@ -119,7 +119,6 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
 def ensure_min_partitions(
     df: DataFrame,
     min_parts: int | None = None,
-    split_mb: int | None = None,
     cost: float = 1.0,
 ) -> DataFrame:
     """Fan a kernel stage's input out to a scale-appropriate split count.
@@ -136,39 +135,31 @@ def ensure_min_partitions(
 
     The fan-out target is SIZE-ADAPTIVE (optimization guide §2: derive
     partitioning from input size, not a constant tuned for one mode):
-    ``ceil(estimated_bytes / split_mb)`` splits, clamped to
+    ``ceil(estimated_bytes / 8 MB)`` splits, clamped to
     ``[1, defaultParallelism]``. A gate-scale corpus (hundreds of KB)
     therefore runs its kernel in the scan stage itself — no fan-out
     exchange, no per-task Python worker forks beyond the splits the
     data actually warrants (measured r13: a 32-task mapInPandas stage
     costs ~0.35 s more than a right-sized one on this host) — while
-    anything approaching ``defaultParallelism × split_mb`` bytes fans
-    out exactly as before. ``split_mb`` defaults from
-    ``$SPARK_GRAFT_KERNEL_SPLIT_MB`` (8 MB): per-byte kernel cost
-    here is tokenize/hash/GEMM-scale, so 8 MB splits keep tasks in
-    the 0.1-1 s range on one core. Callers with unusually heavy
+    anything approaching ``defaultParallelism × 8 MB`` fans out
+    exactly as before. Per-byte kernel cost here is
+    tokenize/hash/GEMM-scale, so 8 MB splits keep tasks in the
+    0.1-1 s range on one core. Callers with unusually heavy
     kernels pass ``cost`` — the kernel's per-byte cost relative to
     that hash-scale assumption (e.g. the regex-battery extraction
     kernel measured ~350x hash speed per byte, r13 A/B: 26.9 s serial
     vs 2.85 s fanned at sf0.1) — which divides the split size so the
     fan-out matches the actual CPU-seconds in the stage, at any scale.
-    An explicit ``min_parts`` bypasses the estimate entirely (exact
-    legacy semantics); ``$SPARK_GRAFT_KERNEL_SPLIT_MB=0`` forces
-    legacy full fan-out everywhere (A/B debug knob).
+    An explicit ``min_parts`` bypasses the estimate entirely.
     """
     if min_parts is None:
         cap = df.sparkSession.sparkContext.defaultParallelism
-        if split_mb is None:
-            split_mb = int(os.environ.get("SPARK_GRAFT_KERNEL_SPLIT_MB", "8"))
-        if split_mb <= 0:
-            min_parts = cap  # <=0: explicit legacy full fan-out (debug/A-B)
+        est = _plan_size_bytes(df)
+        if est is None:
+            min_parts = cap  # unknown size: full fan-out
         else:
-            est = _plan_size_bytes(df)
-            if est is None:
-                min_parts = cap  # unknown size: legacy full fan-out
-            else:
-                split_bytes = max(1, int(split_mb * (1 << 20) / cost))
-                min_parts = max(1, min(cap, -(-est // split_bytes)))
+            split_bytes = max(1, int((8 << 20) / cost))
+            min_parts = max(1, min(cap, -(-est // split_bytes)))
     if df.rdd.getNumPartitions() >= min_parts:
         return df
     return df.repartition(min_parts)

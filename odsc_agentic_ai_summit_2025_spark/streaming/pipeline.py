@@ -674,7 +674,7 @@ def dsir_score_cms_stream(
     Each batch is scored with ``curation.dsir_score_with_cms_model``
     unchanged; that scorer persists its per-batch gram frame (it
     feeds both the sketch probe and the score join), so the batch
-    closure RELEASES the scored frame after the sink materializes it
+    closure RELEASES the scored frame once the sink returns or raises
     — without that every micro-batch would leak one persisted frame.
 
     Returns the started StreamingQuery (availableNow trigger); the
@@ -692,8 +692,10 @@ def dsir_score_cms_stream(
         scored = dsir_score_with_cms_model(
             batch_df, cms, "text", "doc_id", n=n, cap_e4=cap_e4
         )
-        sink(scored, batch_id)
-        release(scored)
+        try:
+            sink(scored, batch_id)
+        finally:
+            release(scored)
 
     query = (
         stream.writeStream.foreachBatch(_score)

@@ -64,10 +64,10 @@ def test_connected_components_chain_converges(spark):
     n = 200
     chain = [(i, i + 1) for i in range(n - 1)]
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
-    # driver_max_edges=0 forces the DISTRIBUTED loop (the r13 driver
+    # driver_budget_bytes=0 forces the DISTRIBUTED loop (the driver
     # fast path would otherwise absorb a graph this small) — this
     # test exists to pin the pointer-jumping convergence bound
-    comp = connected_components(pairs, driver_max_edges=0)
+    comp = connected_components(pairs, driver_budget_bytes=0)
     rows = dedup_decisions(comp).collect()
     assert {r["cluster_id"] for r in rows} == {0}
     assert sorted(r["id"] for r in rows if r["keep"]) == [0]
@@ -98,7 +98,7 @@ def test_driver_components_match_distributed_loop(spark, seed):
     loop = {
         r["id"]: r["cluster_id"]
         for r in connected_components(
-            pairs, vertices=verts, driver_max_edges=0
+            pairs, vertices=verts, driver_budget_bytes=0
         ).collect()
     }
     assert fast == loop
@@ -269,8 +269,9 @@ def test_triangle_counts_hub_star_vs_bruteforce(spark, cap):
     ring edges among consecutive spokes, checked per-vertex against a
     brute-force Python count. Orientation must not change counts —
     they are a property of the undirected graph. Parametrized over
-    the r14 driver fast path (cap=None) and the distributed join
-    (cap=0) so both paths stay pinned to ground truth."""
+    the driver fast path (cap=None: the default budget) and the
+    distributed join (cap=0) so both paths stay pinned to ground
+    truth."""
     import itertools
 
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
@@ -300,7 +301,9 @@ def test_triangle_counts_hub_star_vs_bruteforce(spark, cap):
     verts = spark.range(n).select(F.col("id"))
     got = {
         r["id"]: r["n_triangles"]
-        for r in triangle_counts(pairs, verts, driver_max_edges=cap).collect()
+        for r in triangle_counts(
+            pairs, verts, **({} if cap is None else {"driver_budget_bytes": cap})
+        ).collect()
     }
     assert got == want and sum(want.values()) > 0
 
@@ -334,7 +337,7 @@ def test_driver_triangle_counts_match_distributed(spark, seed):
     }
     dist = {
         r["id"]: r["n_triangles"]
-        for r in triangle_counts(pairs, verts, driver_max_edges=0).collect()
+        for r in triangle_counts(pairs, verts, driver_budget_bytes=0).collect()
     }
     assert fast == dist
     assert len(fast) == n + 5 and sum(fast.values()) > 0
@@ -365,11 +368,94 @@ def test_driver_pagerank_match_distributed(spark, seed):
     dist = {
         r["id"]: r["pr_e9"]
         for r in pagerank_fixed(
-            pairs, verts, iterations=3, driver_max_edges=0
+            pairs, verts, iterations=3, driver_budget_bytes=0
         ).collect()
     }
     assert fast == dist
     assert len(fast) == n
+
+
+@pytest.mark.parametrize(
+    "site", ["components", "triangles", "pagerank", "lsh"]
+)
+def test_driver_budget_boundary(spark, monkeypatch, site):
+    """One driver budget for every driver-side solve: each site takes
+    the driver path when the budget equals its footprint and the
+    distributed path one byte below, with results equal to the
+    distributed reference (budget 0). Triangles decide twice — the
+    edge collect, then edge arrays plus wedge working set — so one
+    byte below their footprint the edges still fit and the wedge
+    guard is what falls back."""
+    import numpy as np
+
+    from odsc_agentic_ai_summit_2025_spark import cache
+    from odsc_agentic_ai_summit_2025_spark.operators import components as C
+    from odsc_agentic_ai_summit_2025_spark.operators.similarity import (
+        neardup_pairs_lsh,
+    )
+
+    rng = random.Random(900)
+    n = 40
+    edges = sorted(
+        {
+            tuple(sorted((rng.randrange(n), rng.randrange(n))))
+            for _ in range(120)
+        }
+    )
+    edges = [(a, b) for a, b in edges if a != b]
+    pairs = spark.createDataFrame(edges, "a_id long, b_id long")
+    verts = spark.createDataFrame([(i,) for i in range(n + 3)], "id long")
+    g = np.random.default_rng(900)
+    mat = g.normal(size=(8, 16))[np.arange(160) % 8] + 0.05 * g.normal(
+        size=(160, 16)
+    )
+    docs = spark.createDataFrame(
+        [(i, mat[i].tolist()) for i in range(160)],
+        "vid long, v array<double>",
+    )
+    run = {
+        "components": lambda b: C.connected_components(
+            pairs, vertices=verts, driver_budget_bytes=b
+        ),
+        "triangles": lambda b: C.triangle_counts(
+            pairs, verts, driver_budget_bytes=b
+        ),
+        "pagerank": lambda b: C.pagerank_fixed(
+            pairs, verts, driver_budget_bytes=b
+        ),
+        "lsh": lambda b: neardup_pairs_lsh(
+            docs, "v", "vid", threshold=0.9, driver_budget_bytes=b
+        ),
+    }[site]
+
+    checks = []
+    fits = cache.fits_driver_budget
+
+    def spy(footprint, budget):
+        checks.append((footprint, fits(footprint, budget)))
+        return checks[-1][1]
+
+    monkeypatch.setattr(cache, "fits_driver_budget", spy)
+    monkeypatch.setattr(C, "fits_driver_budget", spy)
+
+    def result(budget):
+        checks.clear()
+        out = run(budget)
+        got = sorted(map(tuple, out.collect()))
+        cache.release(out)
+        return got, list(checks)
+
+    want, _ = result(0)
+    _, default_checks = result(cache.DRIVER_BUDGET_BYTES)
+    assert all(ok for _, ok in default_checks)
+    footprint = max(f for f, _ in default_checks)
+    at, at_checks = result(footprint)
+    assert all(ok for _, ok in at_checks)
+    below, below_checks = result(footprint - 1)
+    assert not below_checks[-1][1]
+    if site == "triangles":
+        assert len(below_checks) == 2 and below_checks[0][1]
+    assert at == want and below == want and len(want) > 0
 
 
 def test_pagerank_fixed_star_and_determinism(spark):
@@ -411,17 +497,19 @@ def test_pagerank_checkpoint_every_bounds_plan_and_matches(spark):
     pairs = spark.createDataFrame(edges, "a_id long, b_id long")
     verts = spark.createDataFrame([(i,) for i in range(30)], "id long")
 
-    # driver_max_edges=0 forces the DISTRIBUTED unroll (the r14 driver
+    # driver_budget_bytes=0 forces the DISTRIBUTED unroll (the driver
     # fast path would otherwise absorb a graph this small) — this test
     # exists to pin the checkpoint machinery of the unrolled plan
-    plain = pagerank_fixed(pairs, verts, iterations=12, driver_max_edges=0)
+    plain = pagerank_fixed(
+        pairs, verts, iterations=12, driver_budget_bytes=0
+    )
     want = {r["id"]: r["pr_e9"] for r in plain.collect()}
     plain_depth = plain._jdf.queryExecution().analyzed().treeString().count("\n")
     release(plain)
 
     baseline = len(spark.sparkContext._jsc.getPersistentRDDs())
     ck = pagerank_fixed(
-        pairs, verts, iterations=12, checkpoint_every=3, driver_max_edges=0
+        pairs, verts, iterations=12, checkpoint_every=3, driver_budget_bytes=0
     )
     got = {r["id"]: r["pr_e9"] for r in ck.collect()}
     ck_depth = ck._jdf.queryExecution().analyzed().treeString().count("\n")

@@ -13,6 +13,7 @@ operators/curation.py:dsir_scores 'Scale shape'):
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from odsc_agentic_ai_summit_2025_spark import cache
@@ -140,6 +141,40 @@ def test_dsir_cms_stream_parity(spark, sf_dir, tmp_path):
 
     release_frame(q.dsirModelHandle)
     release_frame(cms)
+
+
+def test_dsir_cms_stream_sink_failure_leaks_nothing(spark, sf_dir, tmp_path):
+    """A sink that raises after materializing its batch must still
+    release the batch's persisted gram frame: once the failed query
+    stops, the only persisted RDDs beyond the baseline back the
+    pinned model (``query.dsirModelHandle``)."""
+    from pyspark.errors import StreamingQueryException
+
+    from odsc_agentic_ai_summit_2025_spark.cache import release_frame
+    from odsc_agentic_ai_summit_2025_spark.streaming.pipeline import (
+        dsir_score_cms_stream,
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs = _docs(spark, sf_dir)
+    d = tmp_path / "dsir_cms_stream_fail_in"
+    d.mkdir()
+    shard = docs.select("doc_id", "text", "lang", "source", "n_chars")
+    shard.toPandas().to_parquet(d / "shard-0.parquet", index=False)
+    cms = dsir_model_cms(docs, "text", "source", "src1")
+    baseline = persisted()
+
+    def sink(df, batch_id):
+        df.collect()
+        raise RuntimeError("sink down")
+
+    q = dsir_score_cms_stream(spark, str(d), cms, sink)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    release_frame(q.dsirModelHandle)
+    assert persisted() == baseline
 
 
 def test_dsir_model_cms_stream_fit_equals_batch_refit(

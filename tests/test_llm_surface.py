@@ -96,6 +96,7 @@ def test_field_accuracy_report(spark, notes_df, gold_df):
     assert 0.95 <= acc <= 1.0
 
 
+@needs_ref
 def test_field_accuracy_identity(spark, gold_df):
     """gold vs gold must be 100% on every field — comparator sanity."""
     from odsc_agentic_ai_summit_2025_spark.llm.eval import field_accuracy

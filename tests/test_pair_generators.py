@@ -168,9 +168,9 @@ def test_lsh_banded_precision_and_recall(spark):
 def test_lsh_gather_verify_matches_join_verify(spark):
     """The r14 broadcast-gather verify (id pairs + one task-local
     vector matrix) must emit exactly the join-form verify's pairs —
-    same float64 normalize+dot, so bit-identical keeps. cap=0 forces
-    the join path; the default cap takes the gather path on a
-    broadcast-class table."""
+    same float64 normalize+dot, so bit-identical keeps. A zero driver
+    budget forces the join path; the default budget takes the gather
+    path on a broadcast-class table."""
     from odsc_agentic_ai_summit_2025_spark.cache import release, sweep_blocks
     from odsc_agentic_ai_summit_2025_spark.operators.similarity import (
         neardup_pairs_lsh,
@@ -186,7 +186,7 @@ def test_lsh_gather_verify_matches_join_verify(spark):
     release(gather)
     sweep_blocks(spark)
     join = neardup_pairs_lsh(
-        df, "v", "vid", threshold=0.85, verify_broadcast_bytes=0
+        df, "v", "vid", threshold=0.85, driver_budget_bytes=0
     )
     got_j = sorted(map(tuple, join.collect()))
     release(join)

@@ -183,10 +183,10 @@ def test_triangle_corners_enumerate_once(spark):
         [(1, 2), (1, 3), (2, 3), (3, 4)], "a_id long, b_id long"
     )
     verts = spark.createDataFrame([(i,) for i in range(1, 5)], "id long")
-    # driver_max_edges=0 forces the DISTRIBUTED wedge join (the r14
+    # driver_budget_bytes=0 forces the DISTRIBUTED wedge join (the r14
     # driver fast path would otherwise absorb a graph this small) —
     # this test exists to pin the distributed enumeration shape
-    res = triangle_counts(pairs, verts, driver_max_edges=0)
+    res = triangle_counts(pairs, verts, driver_budget_bytes=0)
     plan = _optimized_plan(res)
     assert plan.count("Generate explode(array(u") == 1, plan
     agg_at = plan.index("AS n_triangles")
