@@ -56,7 +56,6 @@ def embed(
     text_col: str,
     out_col: str = "vector",
     dim: int = DEFAULT_DIM,
-    id_cols: list[str] | None = None,  # kept for API compat; unused
 ) -> DataFrame:
     """Append an L2-normalized hash-embedding column.
 

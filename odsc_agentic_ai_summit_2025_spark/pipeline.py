@@ -62,8 +62,10 @@ def build_rag_pipeline(
     object. Both default to the deterministic mock. ``extracted``
     short-circuits the extraction stage when the records already
     exist (the reference's idempotent re-ingest of
-    extracted_fhir.json); extraction stays lazy either way — the
-    graph build materializes it exactly once.
+    extracted_fhir.json). Extraction is never materialized: every
+    graph table and every ask re-runs the extraction ``mapInPandas``
+    (about 60 extraction calls per note per build and 12 per note per
+    ask). Passing an already-materialized ``extracted`` avoids that.
     """
     from .llm.client import MockLLMClient
     from .llm.extract import extract_fhir, guarded_extract_fhir

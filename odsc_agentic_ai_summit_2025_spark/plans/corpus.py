@@ -480,10 +480,7 @@ FROM i
 """
 
 
-# outside the 50-entry gate window (see registry.py TAIL_QUERIES):
-# a window slot now would displace q91's first driver row; the r6
-# rotation pulls this forward
-TAIL_QUERIES = [
+QUERIES.append(
     Query("q96_epoch_shards", q96_epoch_shards, _q96_sql(),
           ("O1", "F12"), "deterministic epoch shuffle + shard manifest"),
-]
+)

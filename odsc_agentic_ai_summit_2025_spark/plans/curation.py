@@ -491,22 +491,6 @@ FROM embeddings e LEFT JOIN hits h USING (vec_id)
 """
 
 
-# q102 joined as an r6 TAIL addition (window was full); the r7
-# rotation pins it first in plans/registry._GATE_HEAD. q104 is new
-# in r7 and likewise pinned into the r7 window by name. q107 is an
-# r8 TAIL addition; the r9 rotation pulls it forward with q106 per
-# the COVERAGE.md invariant.
-TAIL_QUERIES = [
-    Query("q102_dsir_serving", q102_dsir_serving, _q102_sql(),
-          ("A5", "F12"), "DSIR fit-once/score-many serving split"),
-    Query("q104_dsir_cms", q104_dsir_cms, _q104_sql(),
-          ("A5", "F12"), "DSIR serving vs fixed-size Count-Min model"),
-    Query("q107_semantic_decontam", q107_semantic_decontam, Q107_SQL,
-          ("V1", "U2"),
-          "embedding-tier benchmark decontamination (broadcast GEMM)"),
-]
-
-
 QUERIES = [
     Query("q71_decontamination", q71_decontamination, _q71_sql(),
           ("U2", "P4"), "benchmark n-gram decontamination (broadcast eval set)"),
@@ -523,4 +507,11 @@ QUERIES = [
           ("V1", "O2"), "per-label centroid cosine outlier flags"),
     Query("q75_bloom_decontam", q75_bloom_decontam, _q75_sql(),
           ("A4", "U2"), "Bloom-filter decontamination gate (portable sketch)"),
+    Query("q102_dsir_serving", q102_dsir_serving, _q102_sql(),
+          ("A5", "F12"), "DSIR fit-once/score-many serving split"),
+    Query("q104_dsir_cms", q104_dsir_cms, _q104_sql(),
+          ("A5", "F12"), "DSIR serving vs fixed-size Count-Min model"),
+    Query("q107_semantic_decontam", q107_semantic_decontam, Q107_SQL,
+          ("V1", "U2"),
+          "embedding-tier benchmark decontamination (broadcast GEMM)"),
 ]

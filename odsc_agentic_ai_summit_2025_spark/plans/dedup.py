@@ -449,7 +449,7 @@ WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 4
 
 
 QUERIES.insert(
-    1,  # zero-history: must sit inside the 50-entry gate window
+    1,
     Query("q89_editdist_pairs", q89_editdist_pairs, _q89_sql(),
           ("U2", "F2"), "simhash-candidate exact-Levenshtein near-dup pairs"),
 )
@@ -855,10 +855,7 @@ SELECT doc_id, admitted, reason, n_corpus_matches FROM b_decided
 """
 
 
-# r10/r11 TAIL additions (outside the 50-entry gate window; q111 is
-# pinned in the r11 window, q112 enters with the r12 rotation note in
-# registry.py).
-TAIL_QUERIES = [
+QUERIES.extend([
     Query("q111_neardup_admit", q111_neardup_admit, _q111_sql(),
           ("A2", "J1"),
           "incremental near-dup admission against a standing MinHash index"),
@@ -866,4 +863,4 @@ TAIL_QUERIES = [
           _q112_sql(), ("A2", "J1"),
           "standing MinHash index lifecycle: admit -> append -> admit "
           "== full rebuild"),
-]
+])

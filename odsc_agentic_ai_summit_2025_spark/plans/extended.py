@@ -491,10 +491,8 @@ FROM p
 )
 
 
-# q106 is a TAIL addition (the r8 window is pinned; the r9 rotation
-# pulls it forward per the COVERAGE.md invariant).
-TAIL_QUERIES = [
+QUERIES.append(
     Query("q106_pii_scan", q106_pii_scan, Q106_SQL,
           ("F3", "F4", "L11"),
           "4-rule PII scan: email/phone/SSN/IPv4 count + mask"),
-]
+)

@@ -693,13 +693,7 @@ def _q114_sql() -> str:
     return _q102_sql()
 
 
-# q108/q109 are r9 TAIL additions (pulled into the r10 window per the
-# COVERAGE.md invariant); q110 is the r10 TAIL addition (pinned right
-# after the five bumps in the r11 rotation note, registry.py); q113
-# is the r11 TAIL addition (enters the r12 window per the rotation
-# note); q114 is the r13 TAIL addition (pinned right after the nine
-# bumps in the r14 rotation note).
-TAIL_QUERIES = [
+QUERIES.extend([
     Query("q108_windowed_hll", q108_windowed_hll, _q108_sql(),
           ("A4", "streaming"),
           "windowed approx-distinct: per-hour portable HLL + exact"),
@@ -717,4 +711,4 @@ TAIL_QUERIES = [
           ("streaming",),
           "DSIR fit-once model serving 3 streamed deliveries, "
           "union of scores == batch serving split"),
-]
+])

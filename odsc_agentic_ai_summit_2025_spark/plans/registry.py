@@ -19,8 +19,11 @@ Determinism conventions (both sides must follow them):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,8 +39,31 @@ class Query:
     description: str = ""
 
 
-def all_queries() -> dict[str, Query]:
-    """Assemble the full inventory from every plan module."""
+# Queries whose execution changed since the latest committed
+# CORRECTNESS_r<N>.json; they follow the must-go tier into the window.
+_CHANGED = (
+    "q63_neardup_lsh",
+    "q66_dedup_clusters",
+    "q82_semantic_dedup",
+    "q90_triangle_counts",
+    "q91_pagerank",
+    "q99_quality_reps",
+    "q100_curation_pipeline",
+)
+
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_HISTORY_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def all_queries(history_dir: str | Path = _REPO_ROOT) -> dict[str, Query]:
+    """Assemble the full inventory, ordered for the driver's gate window.
+
+    The driver checks the first 50 entries. The order comes from the
+    committed ``CORRECTNESS_r<N>.json`` files in ``history_dir``: tier 0
+    is every query with no green row or a last green row at least 3
+    rounds old, tier 1 is ``_CHANGED``, tier 2 the rest; within a tier
+    the oldest last green row goes first, then registry order.
+    """
     from . import (
         corpus,
         curation,
@@ -50,18 +76,6 @@ def all_queries() -> dict[str, Query]:
         textops,
     )
 
-    # The external correctness gate checks the FIRST 50 entries in
-    # insertion order. Round 6 needs finer-than-module rotation (q96
-    # comes from a TAIL list, q80 from mid-textops, plus 41 stale
-    # queries spanning three modules), so the window is now pinned by
-    # the explicit _GATE_HEAD list below; module order only decides
-    # the remaining filler slots and the post-window tail.
-    #
-    # Round-7 rotation plan: after r6, the queries with r5-last rows
-    # are the ones OUTSIDE this head — extended q51-q54, extended2
-    # q55-q62, observability q64-q68, curation q69-q75 cohort, textops
-    # non-q80, corpus q83-q95, dedup q82/q89/q90/q91 (42 total ≤ 50
-    # slots). Replace _GATE_HEAD with that cohort next round.
     mods = (
         extended,
         extended2,
@@ -79,109 +93,46 @@ def all_queries() -> dict[str, Query]:
             if q.name in out:
                 raise ValueError(f"duplicate query name: {q.name}")
             out[q.name] = q
-    # TAIL_QUERIES sit OUTSIDE the 50-entry gate window by
-    # construction: late-round additions whose window slot would
-    # displace a query still waiting for its first driver row. The
-    # local gate covers them at both SFs; the next rotation pulls
-    # them forward.
-    for mod in mods:
-        for q in getattr(mod, "TAIL_QUERIES", ()):
-            if q.name in out:
-                raise ValueError(f"duplicate query name: {q.name}")
-            out[q.name] = q
-    # Pull the gate-window head to the front (insertion order = gate
-    # order); everything else keeps module order behind it.
-    ordered: dict[str, Query] = {}
-    for name in _GATE_HEAD:
-        ordered[name] = out.pop(name)  # KeyError = head names a missing query
-    ordered.update(out)
-    return ordered
+    unknown = sorted(set(_CHANGED) - set(out))
+    if unknown:
+        raise ValueError(f"_CHANGED names unknown queries: {unknown}")
+    last, next_round = _last_green(Path(history_dir))
+
+    def key(name: str) -> tuple[int, int]:
+        seen = last.get(name, 0)
+        if not seen or next_round - seen >= 3:
+            tier = 0
+        elif name in _CHANGED:
+            tier = 1
+        else:
+            tier = 2
+        return tier, seen
+
+    # sorted() is stable, so ties keep registry order.
+    return {name: out[name] for name in sorted(out, key=key)}
 
 
-# Round-15 rotation plan: after r14 the stale set is the r13 window
-# (q01/q03-q07, q10-q13, q15-q18, q47, q49, q51, q57/q58, q60, q62,
-# q64/q65, q67/q68, q71, q73-q75, q77, q82-q87, q89-q95, q102-q104,
-# q106/q107, q110/q111 — 50 queries, all r13-green) plus the TEN
-# queries bumped out of the r14 window at exactly 2 rounds stale:
-# q30_token_stats, q31_quality_score, q33_fingerprint,
-# q88_normalize_text, q69_train_split, q70_quality_filter,
-# q72_repetition_stats, q19_window_running, q22_pivot, q23_rollup
-# (pin these ten FIRST). 60 candidates for 50 slots → lead with the
-# ten bumps, then the r13 cohort minus TEN derisked bumps
-# (candidates: q04/q05/q16/q17/q18 single-expression relational cells
-# plus q57/q58/q60/q62/q73 — approx-agg/window single-operator cells
-# every other window's kernels exercise; pin the bumped names first
-# in the r16 note).
-# Steady-state invariant (COVERAGE.md): every query's last driver row
-# is ≤2 rounds old.
-#
-# Round-14 gate window head (executes the rotation pinned in the r13
-# note and prescribed as VERDICT r13 item #1): the nine
-# exactly-2-rounds-stale bumps q02_filter_project / q32_lang_id /
-# q46_frame_sample / q48_sessionize / q50_email_stats / q54_asof_join
-# / q56_decile_stats / q59_salted_agg / q61_chunk_docs lead, then
-# q114_dsir_stream_scoring (the r13 TAIL addition, never
-# driver-checked — pulled forward exactly like q112/q113 were in
-# r12), then the r12 cohort minus the ten derisked bumps
-# q30_token_stats / q31_quality_score / q33_fingerprint /
-# q88_normalize_text / q69_train_split / q70_quality_filter /
-# q72_repetition_stats (single-kernel text/split ops rechecked twice
-# in two rounds) / q19_window_running / q22_pivot / q23_rollup
-# (window/pivot/rollup single-operator cells; they age to exactly 2
-# rounds and lead r15). This window deliberately contains the entire
-# r13 Arrow-kernel rewrite cohort (q34-q45, q63, q66, q76, q78-q81,
-# q96-q101, q112) so the driver's oracle finally sees those rewritten
-# versions. 50 head entries; the ≤2-rounds-stale invariant holds a
-# third consecutive round.
-_GATE_HEAD = (
-    "q02_filter_project",
-    "q32_lang_id",
-    "q46_frame_sample",
-    "q48_sessionize",
-    "q50_email_stats",
-    "q54_asof_join",
-    "q56_decile_stats",
-    "q59_salted_agg",
-    "q61_chunk_docs",
-    "q114_dsir_stream_scoring",
-    "q112_neardup_index_lifecycle",
-    "q113_hll_stream_replay",
-    "q52_percentiles",
-    "q53_cube",
-    "q55_rolling_revenue",
-    "q108_windowed_hll",
-    "q109_hdr_quantiles",
-    "q105_undirected_paths",
-    "q08_join_agg",
-    "q09_multihop_revenue",
-    "q14_argmax",
-    "q20_window_rank",
-    "q21_json_extract",
-    "q24_time_bucket",
-    "q25_above_avg",
-    "q34_dedup_exact",
-    "q35_jaccard_pairs",
-    "q36_minhash_lsh",
-    "q37_simhash",
-    "q38_embedding_neardup",
-    "q39_knn_bruteforce",
-    "q40_bm25_topk",
-    "q41_fts_postings",
-    "q42_lsh_buckets",
-    "q43_hybrid_rrf",
-    "q44_blob_stats",
-    "q45_byte_histogram",
-    "q63_neardup_lsh",
-    "q66_dedup_clusters",
-    "q76_pq_knn",
-    "q78_simhash_pairs",
-    "q79_ivfpq_knn",
-    "q80_pack_sequences",
-    "q81_knn_self_join",
-    "q96_epoch_shards",
-    "q97_bpe_segment",
-    "q98_dsir_importance",
-    "q99_quality_reps",
-    "q100_curation_pipeline",
-    "q101_distinct_ngrams",
-)
+def _last_green(history_dir: Path) -> tuple[dict[str, int], int]:
+    """Last round each query was fully green, and the next round number."""
+    last: dict[str, int] = {}
+    latest = 0
+    for path in history_dir.iterdir():
+        m = _HISTORY_FILE.fullmatch(path.name)
+        if m is None:
+            continue
+        n = int(m.group(1))
+        latest = max(latest, n)
+        try:
+            rows = json.loads(path.read_text())
+            green = [
+                name for name, r in rows.items()
+                if r["hash_match"] and r["rows_match"] and r["schema_match"]
+                and r["err"] is None
+            ]
+        except (ValueError, AttributeError, KeyError, TypeError) as e:
+            raise ValueError(
+                f"unparsable correctness history {path}: {e!r}"
+            ) from e
+        for name in green:
+            last[name] = max(last.get(name, 0), n)
+    return last, latest + 1

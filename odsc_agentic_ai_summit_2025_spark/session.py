@@ -53,7 +53,7 @@ def get_spark(
         # meant to help (q63 5.04 vs 5.40, q82 2.78 vs 3.55, q38/q78/
         # q97/q100 flat) and equal on the q101/tiny-query set — so the
         # scale-safe stock default ships. A/B other values through
-        # ``extra_conf`` (scripts/ab_conf.py --conf).
+        # ``extra_conf`` (scripts/profile_query.py --conf).
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
         )

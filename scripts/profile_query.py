@@ -9,6 +9,11 @@ be attributed to the plan instead of to hypervisor steal bursts.
         [--sf /root/testdata/sf0.1] [--runs 5]
 
 Prints per-run wall times + min/median per query as JSON lines.
+``--conf key=value`` (repeatable) A/Bs session settings through
+``get_spark(extra_conf=)`` under the same protocol:
+
+    python scripts/profile_query.py q63_neardup_lsh \
+        --conf spark.sql.adaptive.advisoryPartitionSizeInBytes=1m
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=5)
+    ap.add_argument("--conf", action="append", default=[])
     args = ap.parse_args()
 
     from odsc_agentic_ai_summit_2025_spark.plans.registry import all_queries
@@ -40,7 +46,8 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown query names: {unknown}")
 
-    spark = get_spark(app_name="profile")
+    extra = dict(c.split("=", 1) for c in args.conf)
+    spark = get_spark(app_name="profile", extra_conf=extra)
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
     # Arrow warmup: the python worker daemon starts on the first
     # Python stage (~4 s) — keep it out of run 1's timing
