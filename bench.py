@@ -3,20 +3,116 @@
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+
+Every timed pass goes through ``timed_pass``, which records wall
+seconds plus the pass's host-load window, JVM GC milliseconds and
+process-tree CPU seconds (driver, JVM, Python workers). Noise
+protocol: a cell flagged against the prior round (``flagged_vs_prior``)
+whose CPU-seconds did not rise (``flagged_cpu_s``: this run's median
+vs the committed ``BENCH_LOCAL.json`` median at the same sf) is
+weather — host steal stretches wall time, not the work done. The
+scripts (``scripts/profile_query.py``, ``scripts/scale_smoke.py``)
+import the same helpers, so one protocol times every harness.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+
+N_RUNS = 3
+# the driver keeps only the last 2000 chars of output; the on-line
+# flagged lists are capped so a global host event flagging dozens of
+# cells cannot push the line past it (BENCH_LOCAL.json keeps them all)
+_FLAG_CAP = 12
+
+# Full-stage-mix warmup (r5 verdict): a tiny JVM job leaves
+# whole-stage-codegen JIT, the vectorized parquet reader, shuffle
+# writer/reader classes, and broadcast exchange cold, so pass 1 of the
+# first timed queries measured 3-4x inflated (BENCH_r05
+# queries_passes: q01 3.28/0.84/0.87). One UNTIMED run of four cheap
+# queries spanning that mix — scan+hash-agg, equi-join, window,
+# documents-table scan — moves the warm-once costs outside every
+# timed pass.
+_WARMUP_QUERIES = (
+    "q01_pricing_summary",
+    "q08_join_agg",
+    "q03_row_number",
+    "q30_token_stats",
+)
+
+
+def hash_collect(df) -> None:
+    """Force EVERY output column to be computed: a bare count() lets
+    Catalyst prune unreferenced projection expressions, so
+    projection-only queries (masking, fingerprints, string batteries)
+    would be timed as bare scan+count. Hashing all columns into one
+    aggregated value defeats pruning while keeping driver transfer at
+    one row."""
+    from pyspark.sql import functions as F
+
+    df.select(
+        F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
+    ).agg(F.expr("bit_xor(_h)")).collect()
+
+
+def warm_up(spark, queries, sf_dir) -> None:
+    """Untimed session warmup: one tiny JVM job, one tiny Arrow job
+    (the Python worker daemon and its numpy/pandas preload start on
+    the session's FIRST Python stage — ~4 s measured in r4 — which
+    otherwise lands inside whichever query hits Python first), then
+    the stage-mix queries through ``hash_collect``."""
+    from odsc_agentic_ai_summit_2025_spark.cache import sweep_blocks
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    spark.range(64).mapInPandas(
+        lambda it: it, "id long"
+    ).selectExpr("sum(id)").collect()
+    for wname in _WARMUP_QUERIES:
+        if wname in queries:
+            try:
+                hash_collect(queries[wname].spark(spark, sf_dir))
+            except Exception:
+                pass  # the timed loop surfaces any real failure
+            sweep_blocks(spark)
+
+
+def timed_pass(spark, fn):
+    """Run ``fn()`` once; return ``(result, wall_s, rec)``. ``rec`` is
+    the ``hostload.delta`` window plus ``gc_ms`` (when the JVM answers)
+    and ``cpu_s``, the CPU seconds of this process tree over the pass.
+    Every sample is taken outside the ``perf_counter`` window, so the
+    ~2 ms ``/proc`` walk is not in ``wall_s``; an exception from
+    ``fn`` propagates."""
+    from odsc_agentic_ai_summit_2025_spark import hostload
+    from ragbench.measure import tree_cpu_s
+
+    ls0 = hostload.sample()
+    gc0 = hostload.jvm_gc_ms(spark)
+    cpu0 = tree_cpu_s()
+    t0 = time.perf_counter()
+    result = fn()
+    wall_s = time.perf_counter() - t0
+    cpu1 = tree_cpu_s()
+    rec = hostload.delta(ls0, hostload.sample())
+    gc1 = hostload.jvm_gc_ms(spark)
+    if None not in (gc0, gc1):
+        rec["gc_ms"] = gc1 - gc0
+    rec["cpu_s"] = round(cpu1 - cpu0, 3)
+    return result, wall_s, rec
+
+
+def _short(name: str) -> str:
+    return name.split("_", 1)[0]
 
 
 def _prior_round_queries(sf_val, root=None) -> dict[str, float]:
     """Per-query medians (short qNN keys) from the most recent
     driver-recorded BENCH_r*.json AT THE SAME scale factor — the
-    baseline the self-adjudication pass compares against (a run at a
+    baseline the regression flag compares against (a run at a
     different SF has no comparable prior). Empty when none parses.
     ``root`` overrides the artifact directory (tests)."""
     import pathlib
@@ -45,10 +141,10 @@ def _prior_round_queries(sf_val, root=None) -> dict[str, float]:
 def _flag_regressions(
     timings: dict[str, float], prior: dict[str, float]
 ) -> list[str]:
-    """Cells needing adjudication: >25% AND >0.5 s over the prior
-    round's same-SF median, ordered largest absolute regression
-    first (with >8 flagged, the isolation budget must go to the
-    worst offenders, not the alphabetically-first names)."""
+    """Cells flagged against the prior round: >25% AND >0.5 s over
+    its same-SF median, ordered largest absolute regression first
+    (the contract line keeps only the first ``_FLAG_CAP``, which must
+    be the worst offenders, not the alphabetically-first names)."""
     flagged = []
     for name, med in sorted(timings.items()):
         # `is not None`, NOT truthiness (ADVICE r10): a prior median
@@ -65,192 +161,96 @@ def _flag_regressions(
     return flagged
 
 
-# Quiet-host thresholds for trusting an isolated re-measure (VERDICT
-# r10 #2): the r10 artifact recorded q90's adjudicated_min as 25.04 s
-# from a window stamped la1 6.86 / steal 13% — the machinery measured
-# the exculpatory evidence and then recorded the misleading number
-# anyway (true quiet min ~6.9 s). A re-measure taken during a burst
-# is itself noise, and must say so instead of printing a number.
-_ADJ_LA1_LIMIT = 2.0
-_ADJ_STEAL_LIMIT = 2.0
-NOISE_MARKER = "noise-contaminated, re-run"
+def _cpu_medians(loads: dict[str, list[dict]]) -> dict[str, float]:
+    """Median per-pass ``cpu_s`` per query; a query whose records
+    carry no ``cpu_s`` is absent."""
+    out = {}
+    for name, recs in loads.items():
+        cpu = [r["cpu_s"] for r in recs if r.get("cpu_s") is not None]
+        if cpu:
+            out[name] = round(statistics.median(cpu), 2)
+    return out
 
 
-def _adjudication_noisy(load: dict | None) -> bool:
-    """True when the isolated re-measure's own host window was a
-    burst (la1 at window start, or steal across the window). A
-    missing stamp is NOT evidence of quiet — treat it as noisy; a
-    present stamp whose /proc reads failed (None fields) carries no
-    contrary evidence and passes."""
-    if load is None:
-        return True
-    return (load.get("la1") or 0.0) > _ADJ_LA1_LIMIT or (
-        load.get("steal_pct") or 0.0
-    ) > _ADJ_STEAL_LIMIT
+def _prior_cpu_s(sf_val, root=None) -> dict[str, float]:
+    """Per-query median CPU seconds from the committed
+    BENCH_LOCAL.json at the same scale factor; empty when it is
+    missing, unparsable, at another sf, or predates ``cpu_s``.
+    ``root`` overrides the artifact directory (tests)."""
+    import pathlib
+
+    if root is None:
+        root = pathlib.Path(__file__).resolve().parent
+    try:
+        detail = json.loads((pathlib.Path(root) / "BENCH_LOCAL.json").read_text())
+    except (OSError, ValueError):
+        return {}
+    if detail.get("sf") != sf_val:
+        return {}
+    return _cpu_medians(detail.get("queries_load") or {})
 
 
-def _gate_adjudicated(adjudicated: dict, load: dict | None) -> dict:
-    """Replace every numeric isolated-min with the explicit marker
-    when the window that measured it was noisy: a reader trusting
-    the min field over the load stamp must not be able to read a
-    contaminated number as plan evidence."""
-    if adjudicated and _adjudication_noisy(load):
-        return {k: NOISE_MARKER for k in adjudicated}
-    return adjudicated
-
-
-def _adjudicate_with_retry(
-    run_isolated, adjudicated_runs: dict, cooldown=None
-) -> tuple[dict, dict, dict | None]:
-    """The bounded isolated re-measure sequence, extracted so the
-    retry semantics are unit-testable (r12 review): attempt once;
-    retry ONCE on a NOISY first attempt — and equally on a FAILED one
-    (timeout/crash/empty parse), so a transient first-attempt failure
-    does not silently skip adjudication on an otherwise quiet host
-    (ADVICE r11). ``run_isolated(runs, timeout)`` returns
-    ``(got: dict | None, load)`` and appends each parsed query's
-    per-pass list into ``adjudicated_runs`` as a side effect.
-
-    Bounded hard: worst case 2 × 90 s cooldowns + 420 s + 360 s of
-    subprocess inside the driver's bench step — the re-measure must
-    cost minutes at most, never double the step. 2 runs per attempt:
-    a 1-run re-measure is min-of-one-COLD-pass (profile_query warms
-    only JVM + Arrow, not the full stage mix — q100 cold 15.8 s vs
-    true quiet 7.6), which would record a fake regression with a
-    quiet stamp on it (VERDICT r10 #2).
-
-    Returns ``(adjudicated, adjudicated_runs, load)`` with the noise
-    gate applied PER ATTEMPT before merging — each attempt's numbers
-    are recorded as numbers only if THAT attempt's window was quiet;
-    the raw per-pass lists must not be readable as plan evidence when
-    the mins are not (ADVICE r11). A retry whose parse is PARTIAL
-    (covers fewer queries than attempt 1) overlays per-query instead
-    of replacing wholesale (ADVICE r12): attempt-2 values win where
-    present, and attempt-1 entries missing from the retry keep their
-    own already-gated values rather than silently vanishing — so a
-    quietly-measured attempt-1 min survives a partial retry, while a
-    noisy attempt-1 entry stays a marker however quiet the retry was.
-    """
-    if cooldown is None:
-        cooldown = _cooldown_until_quiet
-    cooldown(90.0)
-    got, load = run_isolated(2, 420)
-    adjudicated = _gate_adjudicated(dict(got) if got else {}, load)
-    runs = _gate_adjudicated(dict(adjudicated_runs), load)
-    if not got or _adjudication_noisy(load):
-        cooldown(90.0)
-        adjudicated_runs.clear()
-        got2, load2 = run_isolated(2, 360)
-        if got2:
-            adjudicated = {**adjudicated, **_gate_adjudicated(got2, load2)}
-            runs = {
-                **runs,
-                **_gate_adjudicated(dict(adjudicated_runs), load2),
-            }
-            load = load2
-    adjudicated_runs.clear()
-    adjudicated_runs.update(runs)
-    return adjudicated, adjudicated_runs, load
-
-
-def _cooldown_until_quiet(
-    budget_s: float,
-    la1_limit: float = _ADJ_LA1_LIMIT,
-    steal_limit: float = _ADJ_STEAL_LIMIT,
-    poll_s: float = 10.0,
-    _sample=None,
-    _sleep=None,
-):
-    """Bounded wait for a quiet re-measure window: 1-min loadavg under
-    the limit AND, once waiting, the last poll interval's steal delta
-    under the limit too (launching the single retry into a still-
-    stealing window burns it for nothing — observed live in the r11
-    run C artifact). The bench run itself just saturated every core,
-    so la1 at spark.stop() reflects OUR OWN finished work (~1-min
-    decay constant) — without this every driver adjudication would
-    self-stamp as noisy. An immediately-quiet la1 returns without
-    sleeping (steal needs an interval to measure, and the re-measure
-    window stamps it anyway). Returns the last la1 seen (None if
-    /proc is unreadable)."""
-    from odsc_agentic_ai_summit_2025_spark import hostload
-
-    if _sample is None:
-        _sample = hostload.sample
-    if _sleep is None:
-        _sleep = time.sleep
-    prev = _sample()
-    la1 = prev.get("la1")
-    if la1 is None or la1 <= la1_limit:
-        return la1
-    waited = 0.0
-    while waited + poll_s <= budget_s:
-        _sleep(poll_s)
-        waited += poll_s
-        cur = _sample()
-        rec = hostload.delta(prev, cur)
-        prev, la1 = cur, cur.get("la1")
-        steal = rec.get("steal_pct")
-        if (la1 is None or la1 <= la1_limit) and (
-            steal is None or steal <= steal_limit
-        ):
-            break
-    return la1
+def _contract_line(timings, sf_val, loads, flagged, cpu_now, cpu_prior) -> str:
+    """The stdout contract line. The driver captures only the LAST
+    2000 chars of output and parses the final JSON line from it; round
+    2's full-name 71-query line was ~2.1 KB and lost its front to the
+    buffer (BENCH_r02: parsed=null). So keys are short ``qNN`` names
+    (the driver's own contract example uses "q1"), never-succeeded
+    queries are null (NaN is invalid strict JSON), per-pass load
+    records stay in BENCH_LOCAL.json with only the worst window here,
+    and the flagged lists are capped at ``_FLAG_CAP``."""
+    short = {_short(name): v for name, v in timings.items()}
+    # a reused qNN prefix would silently drop a timing from the
+    # contract line while `value` still sums both medians
+    assert len(short) == len(timings), "duplicate qNN short keys"
+    line = {
+        "metric": "inventory_total_runtime",
+        "value": round(sum(v for v in timings.values() if v == v), 2),
+        "unit": "sec",
+        "queries": {
+            k: round(v, 2) if v == v else None
+            for k, v in sorted(short.items())
+        },
+        "sf": sf_val,
+    }
+    all_loads = [rec for recs in loads.values() for rec in recs]
+    if all_loads:
+        line["load"] = {
+            "la1_max": max(r.get("la1", 0.0) or 0.0 for r in all_loads),
+            "steal_pct_max": max(
+                r.get("steal_pct", 0.0) or 0.0 for r in all_loads
+            ),
+        }
+    if flagged:
+        head = flagged[:_FLAG_CAP]
+        line["flagged_vs_prior"] = [_short(n) for n in head]
+        if len(flagged) > _FLAG_CAP:
+            line["flagged_overflow"] = len(flagged) - _FLAG_CAP
+        line["flagged_cpu_s"] = {
+            _short(n): [cpu_now.get(n), cpu_prior.get(n)] for n in head
+        }
+    return json.dumps(line, separators=(",", ":"))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from odsc_agentic_ai_summit_2025_spark.cache import sweep_blocks
     from odsc_agentic_ai_summit_2025_spark.plans.registry import all_queries
     from odsc_agentic_ai_summit_2025_spark.session import get_spark
 
-    from pyspark.sql import functions as F
-
-    from odsc_agentic_ai_summit_2025_spark.cache import sweep_blocks
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    # read before this run can overwrite it (SPARK_GRAFT_BENCH_COMMIT=1)
+    cpu_prior = _prior_cpu_s(sf_val)
 
     spark = get_spark(app_name="bench")
-    # JVM/codegen warmup outside any query's timing: one tiny job
-    spark.range(1000).selectExpr("sum(id)").collect()
-    # ...and one tiny ARROW job: the python worker daemon (and its
-    # numpy/pandas preload) starts on the session's FIRST Python
-    # stage — ~4 s measured (r4) — which otherwise lands inside
-    # whichever query happens to hit Python first
-    spark.range(64).mapInPandas(
-        lambda it: it, "id long"
-    ).selectExpr("sum(id)").collect()
-
     queries = all_queries()
-
-    def hash_collect(df) -> None:
-        # force EVERY output column to be computed: a bare count()
-        # lets Catalyst prune unreferenced projection expressions, so
-        # projection-only queries (masking, fingerprints, string
-        # batteries) would be timed as bare scan+count. Hashing all
-        # columns into one aggregated value defeats pruning while
-        # keeping driver transfer at one row.
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)")).collect()
-
-    # Full-stage-mix warmup (r5 verdict): the tiny jobs above leave
-    # whole-stage-codegen JIT, the vectorized parquet reader, shuffle
-    # writer/reader classes, and broadcast exchange cold, so pass 1
-    # of the first timed queries measured 3-4x inflated (BENCH_r05
-    # queries_passes: q01 3.28/0.84/0.87). One UNTIMED run of four
-    # cheap queries spanning that mix — scan+hash-agg, equi-join,
-    # window, documents-table scan — through the same hash-collect
-    # harness moves the warm-once costs outside every timed pass.
-    for wname in (
-        "q01_pricing_summary",
-        "q08_join_agg",
-        "q03_row_number",
-        "q30_token_stats",
-    ):
-        if wname in queries:
-            try:
-                hash_collect(queries[wname].spark(spark, sf_dir))
-            except Exception:
-                pass  # timed loop will surface any real failure
-            sweep_blocks(spark)
+    warm_up(spark, queries, sf_dir)
     passes: dict[str, list[float]] = {}
+    # per-(query, pass) timed_pass records: host-load window, gc_ms
+    # and cpu_s, so a noise adjudication cites the recorded window
+    # instead of reconstructing it from spreads after the fact
+    loads: dict[str, list[dict]] = {}
     # N interleaved runs per query: this host shows hypervisor
     # steal-time spikes (single-shot timings varied 1.8s..39s for the
     # SAME query, r3). Full PASSES are interleaved (pass 1 over all
@@ -263,31 +263,15 @@ def main() -> None:
     # that an actual run achieved (damped against one burst) without
     # the systematic downward bias of min-of-N that round-3 used;
     # the min and the raw per-pass list live in BENCH_LOCAL.json.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # per-(query, pass) host-load evidence (r6 verdict #8): loadavg
-    # at query start + steal/total jiffy deltas across the query, so
-    # a noise adjudication cites the recorded window instead of
-    # reconstructing it from spreads after the fact
-    from odsc_agentic_ai_summit_2025_spark import hostload
-
-    loads: dict[str, list[dict]] = {}
-    for _ in range(n_runs):
+    for _ in range(N_RUNS):
         for name, q in sorted(queries.items()):
-            ls0 = hostload.sample()
-            gc0 = hostload.jvm_gc_ms(spark)
-            t0 = time.perf_counter()
             try:
-                df = q.spark(spark, sf_dir)
-                hash_collect(df)
-                dt = time.perf_counter() - t0
+                _, dt, rec = timed_pass(
+                    spark, lambda: hash_collect(q.spark(spark, sf_dir))
+                )
             except Exception as e:  # keep benching even if one breaks
                 print(f"bench error {name}: {e}", file=sys.stderr)
-                dt = float("nan")
-            if dt == dt:
-                rec = hostload.delta(ls0, hostload.sample())
-                gc1 = hostload.jvm_gc_ms(spark)
-                if None not in (gc0, gc1):
-                    rec["gc_ms"] = gc1 - gc0
+            else:
                 passes.setdefault(name, []).append(round(dt, 4))
                 loads.setdefault(name, []).append(rec)
             # release intermediates an operator persisted for its own
@@ -296,7 +280,6 @@ def main() -> None:
             # executor memory and late queries pay GC for early
             # queries' caches — measured 2-5x inflation on late
             # queries (q36 8.8s in-suite vs 1.6s isolated, r3)
-            df = None  # noqa: F841 — drop the plan ref before GC
             sweep_blocks(spark)
             # NO System.gc here, deliberately (r8): scale_smoke levels
             # the heap between its 10-100 s stages because the
@@ -308,7 +291,6 @@ def main() -> None:
             # sweeps + interleaved passes never showed the residue
             # anomaly; the per-pass gc_ms recorded above is the
             # evidence either way.
-    import statistics
 
     timings: dict[str, float] = {}
     for name in queries:
@@ -318,140 +300,16 @@ def main() -> None:
         timings[name] = (
             round(statistics.median(runs), 4) if runs else float("nan")
         )
-    total = sum(v for v in timings.values() if v == v)
-
-    # Self-adjudication (r10, VERDICT r9 #3): two rounds in a row the
-    # interleaved bench needed manual host-noise adjudication after
-    # the fact. Now any cell >25% AND >0.5 s over the prior round's
-    # BENCH_r*.json gets an ISOLATED re-measure (fresh session, empty
-    # block manager — scripts/profile_query.py, the same protocol the
-    # manual adjudications used) appended to the artifact as
-    # `adjudicated_min`, so a flagged cell carries its own
-    # plan-vs-noise evidence. Bounded: one subprocess for all flagged
-    # names, ≤ 8 of them (more than that is a global host event, not
-    # per-query regressions — the overflow is listed, not hidden).
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    adjudicated: dict[str, float] = {}
-    adjudicated_runs: dict[str, list] = {}
-    adjudication_load = None
-    prior = _prior_round_queries(sf_val)
-    flagged = _flag_regressions(timings, prior)
-    if flagged and os.environ.get("SPARK_GRAFT_BENCH_ADJUDICATE", "1") != "0":
-        import subprocess
-
-        # the bench session is done measuring — release its JVM (heap
-        # + python worker daemons) BEFORE the isolated re-measure, so
-        # the subprocess actually gets the quiet-host protocol it
-        # claims instead of contending with a resident executor
-        spark.stop()
-        run_names = flagged[:8]
-
-        def _run_isolated(runs: int, timeout: int):
-            # stamp the subprocess's own host window: an
-            # adjudicated_min taken during a steal burst must carry
-            # the evidence that it, too, is noise-inflated (r10: a
-            # 15%-steal burst quadrupled one re-measure)
-            ls0 = hostload.sample()
-            try:
-                proc = subprocess.run(
-                    [sys.executable, "scripts/profile_query.py",
-                     *run_names, "--sf", sf_dir, "--runs", str(runs)],
-                    capture_output=True, text=True, timeout=timeout,
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                )
-            except (OSError, subprocess.TimeoutExpired) as e:
-                print(f"bench adjudication skipped: {e}", file=sys.stderr)
-                return None, hostload.delta(ls0, hostload.sample())
-            load = hostload.delta(ls0, hostload.sample())
-            if proc.returncode != 0:
-                # a crashed re-measure must not masquerade as the
-                # deliberate over-8 overflow nulls
-                print(
-                    f"bench adjudication subprocess rc={proc.returncode}: "
-                    f"{proc.stderr[-300:]}",
-                    file=sys.stderr,
-                )
-            got: dict[str, float] = {}
-            for ln in proc.stdout.splitlines():
-                try:
-                    rec = json.loads(ln)
-                    got[rec["query"]] = rec["min"]
-                    # full pass list into the detail artifact: the min
-                    # alone hides the cold/warm split that explains a
-                    # 2-run re-measure reading high (r11: q100 [15.8,
-                    # 8.4] cold-dominated vs its 7.3 prior)
-                    adjudicated_runs[rec["query"]] = rec.get("runs")
-                except (ValueError, KeyError):
-                    continue
-            return got, load
-
-        adjudicated, adjudicated_runs, adjudication_load = (
-            _adjudicate_with_retry(_run_isolated, adjudicated_runs)
-        )
-
-    # The driver captures only the LAST 2000 chars of output and
-    # parses the final JSON line from it; round 2's full-name 71-query
-    # line was ~2.1 KB and lost its front to the buffer (BENCH_r02:
-    # parsed=null). Emit short `qNN` keys (the driver's own contract
-    # example uses "q1") so the line always fits, and write the
-    # full-name detail to BENCH_LOCAL.json in the repo.
-    short = {name.split("_", 1)[0]: v for name, v in timings.items()}
-    # a reused qNN prefix would silently drop a timing from the
-    # contract line while `value` still sums both medians
-    assert len(short) == len(timings), "duplicate qNN short keys"
-    line = {
-        "metric": "inventory_total_runtime",
-        "value": round(total, 2),
-        "unit": "sec",
-        # null (not NaN) for never-succeeded queries: NaN is invalid
-        # strict JSON and would break a conforming parser
-        "queries": {
-            k: round(v, 2) if v == v else None
-            for k, v in sorted(short.items())
-        },
-        "sf": sf_val,
-    }
-    # compact load + adjudication evidence on the contract line (the
-    # driver keeps only the last 2000 chars, so per-query loads stay
-    # in BENCH_LOCAL.json; here just the worst-window summary and the
-    # isolated mins for the flagged cells)
-    all_loads = [rec for recs in loads.values() for rec in recs]
-    if all_loads:
-        line["load"] = {
-            "la1_max": max(r.get("la1", 0.0) or 0.0 for r in all_loads),
-            "steal_pct_max": max(
-                r.get("steal_pct", 0.0) or 0.0 for r in all_loads
-            ),
-        }
-    if flagged:
-        # bounded: the driver keeps only the last 2000 chars of
-        # output (see below) and the base line is already ~1.3 KB —
-        # a global host event flagging dozens of cells must not push
-        # the line past the buffer and reproduce BENCH_r02's
-        # parsed=null. Cap the on-line lists; BENCH_LOCAL.json keeps
-        # the full flagged set.
-        line["flagged_vs_prior"] = [
-            n.split("_", 1)[0] for n in flagged[:12]
-        ]
-        if len(flagged) > 12:
-            line["flagged_overflow"] = len(flagged) - 12
-        line["adjudicated_min"] = {
-            n.split("_", 1)[0]: adjudicated.get(n)
-            for n in flagged[:8]
-        }
-        if adjudication_load is not None:
-            line["adjudication_load"] = {
-                k: adjudication_load[k]
-                for k in ("la1", "steal_pct")
-                if k in adjudication_load
-            }
+    flagged = _flag_regressions(timings, _prior_round_queries(sf_val))
+    line = _contract_line(
+        timings, sf_val, loads, flagged, _cpu_medians(loads), cpu_prior
+    )
     detail = {
         "metric": "inventory_total_runtime",
-        "value": round(total, 4),
+        "value": round(sum(v for v in timings.values() if v == v), 4),
         "unit": "sec",
         "timing": "median_of_passes",
-        "runs_per_query": n_runs,
+        "runs_per_query": N_RUNS,
         "queries": {k: v if v == v else None for k, v in timings.items()},
         "queries_min": {
             k: (min(v) if v else None) for k, v in sorted(passes.items())
@@ -459,9 +317,6 @@ def main() -> None:
         "queries_passes": {k: v for k, v in sorted(passes.items())},
         "queries_load": {k: v for k, v in sorted(loads.items())},
         "flagged_vs_prior": flagged,
-        "adjudicated_min": adjudicated,
-        "adjudicated_runs": adjudicated_runs,
-        "adjudication_load": adjudication_load,
         "sf": sf_val,
     }
     try:
@@ -493,7 +348,7 @@ def main() -> None:
             )
     except OSError:
         pass  # read-only checkout: stdout line is the contract
-    print(json.dumps(line, separators=(",", ":")))
+    print(line)
 
 
 if __name__ == "__main__":

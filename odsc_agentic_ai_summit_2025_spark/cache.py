@@ -247,9 +247,10 @@ def _prune() -> None:
 
 def sweep_blocks(spark, keep: frozenset | set | tuple = ()) -> None:
     """Inter-query hygiene sweep shared by bench.py,
-    scripts/profile_query.py and scripts/scale_smoke.py: drop every
-    SQL-cached relation, GC Python plan refs, then unpersist every
-    surviving block-manager RDD except ids in ``keep``.
+    scripts/profile_query.py and scripts/scale_smoke.py, run between
+    ``bench.timed_pass`` calls so it is never inside a timed pass:
+    drop every SQL-cached relation, GC Python plan refs, then
+    unpersist every surviving block-manager RDD except ids in ``keep``.
 
     One copy on purpose: the keep-set protection (an eagerly
     localCheckpointed corpus has NO lineage — unpersisting it kills

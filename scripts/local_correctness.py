@@ -2,7 +2,7 @@
 gate over the FULL query inventory (the driver's own window caps at
 50 entries; this file is the evidence for the tail).
 
-Usage: python scripts/local_correctness.py [round_number] [sf_dir]
+Usage: python scripts/local_correctness.py ROUND [SF_DIR]
 
 Fresh PLAIN SparkSession (no engine configs — same contract as the
 driver's smoke check) + DuckDB views over the same parquet, compared
@@ -19,16 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    # round is REQUIRED (argv or SPARK_GRAFT_ROUND): a stale default
-    # would silently overwrite a historical round's artifact
-    rnd = (
-        sys.argv[1]
-        if len(sys.argv) > 1
-        else os.environ.get("SPARK_GRAFT_ROUND", "")
-    )
-    if not rnd:
-        sys.exit("usage: local_correctness.py ROUND [SF_DIR] "
-                 "(or set SPARK_GRAFT_ROUND)")
+    # round is REQUIRED: a stale default would silently overwrite a
+    # historical round's artifact
+    if len(sys.argv) < 2 or not sys.argv[1]:
+        sys.exit("usage: local_correctness.py ROUND [SF_DIR]")
+    rnd = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     # parse the SF BEFORE the multi-minute sweep (same guard as
     # bench.py) — a non-sf path must fail in the first second, not

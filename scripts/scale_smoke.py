@@ -5,14 +5,13 @@ test scale: linear-ish runtime, bounded executor memory, no
 collect()-driven driver blowup.
 
 Usage: python scripts/scale_smoke.py [n_docs] [round] [runs] [stages]
-(defaults 300_000 — sf0.1 has 5_000 docs — $SPARK_GRAFT_ROUND or
-none, 1 run per stage, and all stages; ``stages`` is a
-comma-separated stage-name filter, also readable from
-$SPARK_GRAFT_SMOKE_STAGES — re-checking one flagged stage should not
-cost a 12-minute full matrix). A filtered run merges into the same
-round's existing artifact, so partial re-measures keep the full
-matrix. Prints one JSON line per stage. With
-runs > 1 each stage repeats back-to-back and the artifact records
+(defaults 300_000 — sf0.1 has 5_000 docs — no round, 1 run per
+stage, and all stages; ``stages`` is a comma-separated stage-name
+filter — re-checking one flagged stage should not cost a 12-minute
+full matrix; pass "" as ``round`` to filter without persisting). A
+filtered run merges into the same round's existing artifact, so
+partial re-measures keep the full matrix. Prints one JSON line per
+stage. With runs > 1 each stage repeats back-to-back and the artifact records
 min + median + every pass — the r4 verdict's protocol for telling a
 real trend from a hypervisor steal burst (the per-stage MIN is the
 cross-round comparison number; the regression gate uses it).
@@ -31,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -73,21 +71,9 @@ def synth_docs(spark, n: int):
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
-    rnd = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else os.environ.get("SPARK_GRAFT_ROUND", "")
-    )
+    rnd = sys.argv[2] if len(sys.argv) > 2 else ""
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 1
-    only = {
-        s
-        for s in (
-            sys.argv[4]
-            if len(sys.argv) > 4
-            else os.environ.get("SPARK_GRAFT_SMOKE_STAGES", "")
-        ).split(",")
-        if s
-    }
+    only = {s for s in (sys.argv[4] if len(sys.argv) > 4 else "").split(",") if s}
     from pyspark.sql import functions as F
 
     from odsc_agentic_ai_summit_2025_spark.session import get_spark
@@ -126,7 +112,7 @@ def main() -> None:
 
     seen_stages: set[str] = set()
 
-    from odsc_agentic_ai_summit_2025_spark import hostload
+    from bench import timed_pass
 
     def stage(name, fn):
         import statistics
@@ -136,21 +122,15 @@ def main() -> None:
             return
         secs, out, loads = [], None, []
         for _ in range(runs):
-            ls0 = hostload.sample()
-            gc0 = hostload.jvm_gc_ms(spark)
-            t0 = time.perf_counter()
-            out = fn()
-            secs.append(round(time.perf_counter() - t0, 2))
             # per-pass host-load evidence (r6 verdict #8): an exit-3
             # flag raised during a double-digit steal_pct pass is a
             # noisy-window artifact by the recorded numbers. gc_ms
             # (r8, r7 verdict #6) splits stage-internal GC from
             # shuffle cost — a slow pass whose extra wall time is all
-            # gc_ms is heap churn, not a plan regression.
-            rec_load = hostload.delta(ls0, hostload.sample())
-            gc1 = hostload.jvm_gc_ms(spark)
-            if None not in (gc0, gc1):
-                rec_load["gc_ms"] = gc1 - gc0
+            # gc_ms is heap churn, not a plan regression — and cpu_s
+            # that did not rise marks a slow pass as weather.
+            out, dt, rec_load = timed_pass(spark, fn)
+            secs.append(round(dt, 2))
             loads.append(rec_load)
             sweep()
             # level the heap between passes — but only after passes

@@ -1,12 +1,13 @@
-"""The bench self-adjudication machinery (r10, VERDICT r9 #3) —
-pure-Python units over bench.py's baseline discovery and flag logic,
-so the behavior the driver's BENCH artifact depends on is pinned by
-the suite, not only by full bench runs."""
+"""The bench's regression evidence — pure-Python units over bench.py's
+baseline discovery, flag logic, contract line and timed pass, so the
+behavior the driver's BENCH artifact depends on is pinned by the
+suite, not only by full bench runs."""
 
 from __future__ import annotations
 
 import json
 import sys
+import time
 
 sys.path.insert(0, ".")
 
@@ -83,231 +84,78 @@ def test_flag_rule_zero_prior_can_flag():
     ]
 
 
-def test_noise_gate_blocks_numeric_min():
-    """VERDICT r10 #2: an adjudicated_min measured during a load
-    burst must be recorded as the explicit marker, never a number —
-    the r10 artifact wrote q90=25.04 s from a la1-6.86 window whose
-    true quiet min was ~6.9 s."""
-    burst = {"la1": 6.86, "steal_pct": 13.15}
-    adj = {"q90_triangle_counts": 25.04, "q82_semantic_dedup": 14.21}
-    gated = bench._gate_adjudicated(adj, burst)
-    assert set(gated) == set(adj)
-    assert all(v == bench.NOISE_MARKER for v in gated.values())
-    assert not any(isinstance(v, (int, float)) for v in gated.values())
-    # quiet window: numbers pass through untouched
-    assert bench._gate_adjudicated(adj, {"la1": 0.4, "steal_pct": 0.1}) == adj
-    # a missing stamp is NOT evidence of quiet
-    gated_none = bench._gate_adjudicated(adj, None)
-    assert all(v == bench.NOISE_MARKER for v in gated_none.values())
-    # nothing adjudicated → nothing to gate (no marker invention)
-    assert bench._gate_adjudicated({}, burst) == {}
+def test_prior_cpu_s_reads_committed_detail_at_same_sf(tmp_path):
+    assert bench._prior_cpu_s(0.1, root=tmp_path) == {}
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps({
+        "sf": 0.1,
+        "queries_load": {
+            "q01_a": [{"cpu_s": 1.0}, {"cpu_s": 3.0}, {"cpu_s": 2.0}],
+            # recorded before cpu_s existed: no prior
+            "q02_b": [{"la1": 0.5}],
+        },
+    }))
+    assert bench._prior_cpu_s(0.1, root=tmp_path) == {"q01_a": 2.0}
+    assert bench._prior_cpu_s(0.01, root=tmp_path) == {}
 
 
-def test_noise_thresholds():
-    assert bench._adjudication_noisy({"la1": 2.1, "steal_pct": 0.0})
-    assert bench._adjudication_noisy({"la1": 0.1, "steal_pct": 2.5})
-    assert not bench._adjudication_noisy({"la1": 2.0, "steal_pct": 2.0})
-    # a stamp whose /proc reads failed carries no contrary evidence
-    assert not bench._adjudication_noisy({"la1": None, "steal_pct": None})
-    assert bench._adjudication_noisy(None)
+def _strict_json(s):
+    def reject(c):
+        raise ValueError(f"non-strict JSON constant {c}")
+
+    return json.loads(s, parse_constant=reject)
 
 
-def _mk_samples(rows):
-    """(la1, cumulative_steal_jiffies) -> hostload.sample() dicts with
-    a 1000-jiffy total per interval, so steal_pct == dsteal / 10."""
-    it = iter(rows)
-
-    def sample():
-        la1, js = next(it)
-        sample.jt = getattr(sample, "jt", 0) + 1000
-        return {"la1": la1, "jt": sample.jt, "js": js}
-
-    return sample
-
-
-def test_cooldown_polls_until_quiet():
-    # la1 decays under the limit after two sleeps; steal stays quiet
-    sleeps: list[float] = []
-    la1 = bench._cooldown_until_quiet(
-        60.0,
-        _sample=_mk_samples([(5.0, 0), (3.0, 5), (1.2, 10)]),
-        _sleep=sleeps.append,
-    )
-    assert la1 == 1.2
-    assert sleeps == [10.0, 10.0]
-
-
-def test_cooldown_waits_out_steal_burst():
-    # la1 quiet from the second sample on, but the poll interval's
-    # steal delta stays hot (50/1000 jiffies = 5%) until the last —
-    # the cooldown must not hand the retry a still-stealing window
-    sleeps: list[float] = []
-    la1 = bench._cooldown_until_quiet(
-        60.0,
-        _sample=_mk_samples(
-            [(5.0, 0), (1.0, 50), (1.0, 100), (1.0, 105)]
-        ),
-        _sleep=sleeps.append,
-    )
-    assert la1 == 1.0
-    assert sleeps == [10.0, 10.0, 10.0]
+def test_contract_line_worst_case_fits_driver_buffer():
+    """The driver parses the final JSON line out of the LAST 2000
+    chars of output (BENCH_r02: parsed=null when the line outgrew
+    it). Worst case: 110 cells with 6-char values, one never
+    succeeded, more flagged cells than the on-line cap, every capped
+    cell with a CPU-seconds pair, and the load summary."""
+    names = [f"q{i:02d}_query_name" for i in range(1, 111)]
+    timings = {n: 123.45 for n in names}
+    timings[names[4]] = float("nan")
+    flagged = [n for n in names if n != names[4]][:20]
+    cpu = {n: 123.45 for n in flagged}
+    prior = dict(cpu)
+    del prior[flagged[3]]  # no committed prior for this cell yet
+    loads = {names[0]: [{"la1": 12.34, "steal_pct": 100.0, "cpu_s": 1.0}]}
+    s = bench._contract_line(timings, 0.1, loads, flagged, cpu, prior)
+    assert len(s) < 2000, len(s)
+    line = _strict_json(s)
+    assert len(line["queries"]) == 110
+    assert line["queries"]["q05"] is None
+    assert line["flagged_vs_prior"] == [n[:3] for n in flagged[:12]]
+    assert line["flagged_overflow"] == 8
+    assert list(line["flagged_cpu_s"]) == line["flagged_vs_prior"]
+    assert line["flagged_cpu_s"]["q04"] == [123.45, None]
+    assert line["load"] == {"la1_max": 12.34, "steal_pct_max": 100.0}
+    assert not any(k.startswith("adjudicat") for k in line)
 
 
-def test_cooldown_gives_up_at_deadline():
-    sleeps: list[float] = []
-    la1 = bench._cooldown_until_quiet(
-        25.0,
-        _sample=_mk_samples([(9.9, 0)] * 10),
-        _sleep=sleeps.append,
-    )
-    assert la1 == 9.9
-    assert sum(sleeps) <= 25.0
-    # already-quiet host: returns immediately, no sleeping (steal
-    # needs an interval to measure; the re-measure stamps it anyway)
-    none_sleeps: list[float] = []
-    bench._cooldown_until_quiet(
-        60.0,
-        _sample=_mk_samples([(0.3, 0)]),
-        _sleep=none_sleeps.append,
-    )
-    assert none_sleeps == []
-
-
-# ---------------------------------------------------------------------------
-# _adjudicate_with_retry — the attempt/retry/gate sequence (r12 review:
-# the retry-on-failure branch and the runs snapshot/restore were
-# previously inline and untested)
-# ---------------------------------------------------------------------------
-
-_QUIET = {"la1": 0.5, "steal_pct": 0.1}
-_NOISY = {"la1": 9.0, "steal_pct": 11.0}
-
-
-def _seq_runner(attempts, runs_detail):
-    """run_isolated stub: pops (got, load, runs_per_query) per call and
-    mimics the real parse loop's side effect on the runs dict."""
-    calls = []
-
-    def run(runs, timeout):
-        calls.append((runs, timeout))
-        got, load, detail = attempts.pop(0)
-        for q, passes in (detail or {}).items():
-            runs_detail[q] = passes
-        return got, load
-
-    run.calls = calls
-    return run
-
-
-def test_retry_fires_on_failed_first_attempt():
-    """A first attempt that produced nothing (timeout/crash/empty
-    parse) must still get the one bounded retry (ADVICE r11)."""
-    runs_detail = {}
-    run = _seq_runner(
-        [
-            (None, _QUIET, None),                      # attempt 1 fails
-            ({"q01_x": 1.2}, _QUIET, {"q01_x": [1.5, 1.2]}),
-        ],
-        runs_detail,
-    )
-    adj, adj_runs, load = bench._adjudicate_with_retry(
-        run, runs_detail, cooldown=lambda *_: None
-    )
-    assert len(run.calls) == 2
-    assert run.calls[1] == (2, 360)  # retry keeps the 2-run protocol
-    assert adj == {"q01_x": 1.2}
-    assert adj_runs == {"q01_x": [1.5, 1.2]}
-    assert load == _QUIET
-
-
-def test_partial_retry_overlays_per_query_gated_by_own_window():
-    """ADVICE r12: a retry whose parse covers fewer queries than
-    attempt 1 must overlay per-query, not replace wholesale — and each
-    attempt's values carry ITS OWN window's noise gate. Attempt 1 was
-    noisy, so its q02_y entry survives the partial retry as the
-    MARKER (never as the 3.0 number, never silently dropped); the
-    retry's quiet q01_x number wins its slot."""
-    runs_detail = {}
-    run = _seq_runner(
-        [
-            ({"q01_x": 9.9, "q02_y": 3.0}, _NOISY,
-             {"q01_x": [9.9, 12.0], "q02_y": [3.0, 3.1]}),
-            ({"q01_x": 1.2}, _QUIET, {"q01_x": [1.5, 1.2]}),
-        ],
-        runs_detail,
-    )
-    adj, adj_runs, load = bench._adjudicate_with_retry(
-        run, runs_detail, cooldown=lambda *_: None
-    )
-    assert adj == {"q01_x": 1.2, "q02_y": bench.NOISE_MARKER}
-    assert adj_runs == {
-        "q01_x": [1.5, 1.2], "q02_y": bench.NOISE_MARKER
+def test_contract_line_without_flags_has_no_flag_keys():
+    line = _strict_json(bench._contract_line(
+        {"q01_a": 1.234, "q02_b": 2.0}, 0.1, {}, [], {}, {}
+    ))
+    assert line == {
+        "metric": "inventory_total_runtime", "value": 3.23, "unit": "sec",
+        "queries": {"q01": 1.23, "q02": 2.0}, "sf": 0.1,
     }
-    assert load == _QUIET
 
 
-def test_partial_retry_keeps_quiet_first_attempt_numbers():
-    """The other ADVICE r12 failure shape: attempt 1 parsed BOTH
-    queries in a quiet window but the subprocess exited non-zero →
-    retry fires; the retry's partial parse must not lose attempt 1's
-    quietly-measured q02_y min."""
-    runs_detail = {}
-    run = _seq_runner(
-        [
-            (None, _QUIET, None),                      # failed parse
-            ({"q01_x": 1.2}, _QUIET, {"q01_x": [1.5, 1.2]}),
-        ],
-        runs_detail,
-    )
-    adj, adj_runs, _ = bench._adjudicate_with_retry(
-        run, runs_detail, cooldown=lambda *_: None
-    )
-    assert adj == {"q01_x": 1.2}
-    assert adj_runs == {"q01_x": [1.5, 1.2]}
-    # quiet attempt-1 numbers + quiet partial retry: both survive
-    runs_detail2 = {}
-    run2 = _seq_runner(
-        [
-            ({"q01_x": 2.0, "q02_y": 3.0}, _QUIET,
-             {"q01_x": [2.2, 2.0], "q02_y": [3.0, 3.4]}),
-        ],
-        runs_detail2,
-    )
-    adj2, adj_runs2, _ = bench._adjudicate_with_retry(
-        run2, runs_detail2, cooldown=lambda *_: None
-    )
-    assert len(run2.calls) == 1  # quiet + parsed → no retry at all
-    assert adj2 == {"q01_x": 2.0, "q02_y": 3.0}
-    assert adj_runs2 == {"q01_x": [2.2, 2.0], "q02_y": [3.0, 3.4]}
+def test_timed_pass_counts_cpu_not_sleep():
+    """Process-tree CPU seconds move with the work done, not with
+    wall time: a 0.3 s busy loop reads as CPU, a 1 s sleep does not.
+    spark=None: the JVM GC sample answers None and is left out."""
+    def burn():
+        t = time.process_time()
+        while time.process_time() - t < 0.3:
+            pass
+        return "done"
 
-
-def test_retry_failure_restores_first_attempt_runs_gated():
-    """If the retry produces nothing, attempt 1's numbers survive but
-    both dicts carry the noise marker when attempt 1 was noisy — the
-    pass lists must not be readable as plan evidence either."""
-    runs_detail = {}
-    run = _seq_runner(
-        [
-            ({"q01_x": 9.9}, _NOISY, {"q01_x": [9.9, 12.0]}),
-            (None, _NOISY, None),
-        ],
-        runs_detail,
-    )
-    adj, adj_runs, _ = bench._adjudicate_with_retry(
-        run, runs_detail, cooldown=lambda *_: None
-    )
-    assert adj == {"q01_x": bench.NOISE_MARKER}
-    assert adj_runs == {"q01_x": bench.NOISE_MARKER}
-
-
-def test_quiet_first_attempt_skips_retry():
-    runs_detail = {}
-    run = _seq_runner(
-        [({"q01_x": 1.0}, _QUIET, {"q01_x": [1.3, 1.0]})], runs_detail
-    )
-    adj, adj_runs, _ = bench._adjudicate_with_retry(
-        run, runs_detail, cooldown=lambda *_: None
-    )
-    assert len(run.calls) == 1
-    assert adj == {"q01_x": 1.0}
-    assert adj_runs == {"q01_x": [1.3, 1.0]}
+    result, _, rec = bench.timed_pass(None, burn)
+    assert result == "done"
+    assert rec["cpu_s"] >= 0.2
+    assert "gc_ms" not in rec and "steal_pct" in rec
+    _, wall_s, rec = bench.timed_pass(None, lambda: time.sleep(1.0))
+    assert wall_s >= 1.0
+    assert rec["cpu_s"] < 0.5

@@ -2,7 +2,8 @@
 
 Tuning values are constants or per-call parameters; only where the
 engine runs (cores, driver memory) and the opt-in debug check are read
-from the environment. A new ``SPARK_GRAFT_*`` read fails this test.
+from the environment. A new ``SPARK_GRAFT_*`` read fails this test,
+in the package and in the bench harness alike.
 """
 
 from __future__ import annotations
@@ -39,12 +40,28 @@ def _env_name(node: ast.AST) -> str | None:
     return None
 
 
-def test_package_reads_only_deployment_env_vars():
-    root = pathlib.Path(pkg.__file__).parent
+def _graft_reads(paths) -> set[str]:
+    """``SPARK_GRAFT_*`` names read in ``paths``, prefix stripped."""
     read = set()
-    for path in root.rglob("*.py"):
+    for path in paths:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             name = _env_name(node)
             if name and name.startswith("SPARK_GRAFT_"):
                 read.add(name.removeprefix("SPARK_GRAFT_"))
+    return read
+
+
+def test_package_reads_only_deployment_env_vars():
+    read = _graft_reads(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
     assert read == {"CPUS", "DRIVER_MEM", "DEBUG_CHECKS"}, sorted(read)
+
+
+def test_harness_reads_only_data_path_and_commit_switch():
+    """bench.py reads where the data is and whether to write the
+    canonical artifact; the scripts take positional arguments and read
+    no ``SPARK_GRAFT_*`` variable at all."""
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    read = _graft_reads([repo / "bench.py"])
+    assert read == {"SF_DIR", "BENCH_COMMIT"}, sorted(read)
+    read = _graft_reads(sorted((repo / "scripts").glob("*.py")))
+    assert read == set(), sorted(read)
