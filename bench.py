@@ -9,10 +9,11 @@ seconds plus the pass's host-load window, JVM GC milliseconds and
 process-tree CPU seconds (driver, JVM, Python workers). Noise
 protocol: a cell flagged against the prior round (``flagged_vs_prior``)
 whose CPU-seconds did not rise (``flagged_cpu_s``: this run's median
-vs the committed ``BENCH_LOCAL.json`` median at the same sf) is
-weather — host steal stretches wall time, not the work done. The
-scripts (``scripts/profile_query.py``, ``scripts/scale_smoke.py``)
-import the same helpers, so one protocol times every harness.
+vs the committed ``BENCH_LOCAL.json`` median at the same sf and core
+count) is weather — host steal stretches wall time, not the work
+done. The scripts (``scripts/profile_query.py``,
+``scripts/scale_smoke.py``) import the same helpers, so one protocol
+times every harness.
 """
 
 from __future__ import annotations
@@ -109,12 +110,14 @@ def _short(name: str) -> str:
     return name.split("_", 1)[0]
 
 
-def _prior_round_queries(sf_val, root=None) -> dict[str, float]:
+def _prior_round_queries(sf_val, cpus, root=None) -> dict[str, float]:
     """Per-query medians (short qNN keys) from the most recent
-    driver-recorded BENCH_r*.json AT THE SAME scale factor — the
-    baseline the regression flag compares against (a run at a
-    different SF has no comparable prior). Empty when none parses.
-    ``root`` overrides the artifact directory (tests)."""
+    driver-recorded ``BENCH_r<N>.json`` / ``BENCH_r<N>_c<M>.json`` AT
+    THE SAME scale factor AND core count (top-level ``sf`` and
+    ``cpus``) — the baseline the regression flag compares against. A
+    run at another SF or core count (which also sets the default
+    shuffle-partition count) has no comparable prior. Empty when none
+    parses. ``root`` overrides the artifact directory (tests)."""
     import pathlib
     import re
 
@@ -123,15 +126,16 @@ def _prior_round_queries(sf_val, root=None) -> dict[str, float]:
     root = pathlib.Path(root)
     best_n, best = -1, {}
     for p in root.glob("BENCH_r*.json"):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
+        m = re.fullmatch(r"BENCH_r(\d+)(?:_c\d+)?\.json", p.name)
         if not m:
             continue
         try:
-            parsed = json.loads(p.read_text()).get("parsed") or {}
-            qs = parsed.get("queries") or {}
+            body = json.loads(p.read_text())
+            qs = (body.get("parsed") or {}).get("queries") or {}
         except (OSError, ValueError):
             continue
-        if qs and parsed.get("sf") == sf_val and int(m.group(1)) > best_n:
+        if (qs and body.get("sf") == sf_val and body.get("cpus") == cpus
+                and int(m.group(1)) > best_n):
             best_n, best = int(m.group(1)), {
                 k: v for k, v in qs.items() if isinstance(v, (int, float))
             }
@@ -172,11 +176,12 @@ def _cpu_medians(loads: dict[str, list[dict]]) -> dict[str, float]:
     return out
 
 
-def _prior_cpu_s(sf_val, root=None) -> dict[str, float]:
+def _prior_cpu_s(sf_val, cpus, root=None) -> dict[str, float]:
     """Per-query median CPU seconds from the committed
-    BENCH_LOCAL.json at the same scale factor; empty when it is
-    missing, unparsable, at another sf, or predates ``cpu_s``.
-    ``root`` overrides the artifact directory (tests)."""
+    BENCH_LOCAL.json at the same scale factor and core count; empty
+    when it is missing, unparsable, at another sf or ``cpus`` (or
+    records none), or predates ``cpu_s``. ``root`` overrides the
+    artifact directory (tests)."""
     import pathlib
 
     if root is None:
@@ -185,7 +190,7 @@ def _prior_cpu_s(sf_val, root=None) -> dict[str, float]:
         detail = json.loads((pathlib.Path(root) / "BENCH_LOCAL.json").read_text())
     except (OSError, ValueError):
         return {}
-    if detail.get("sf") != sf_val:
+    if detail.get("sf") != sf_val or detail.get("cpus") != cpus:
         return {}
     return _cpu_medians(detail.get("queries_load") or {})
 
@@ -240,10 +245,10 @@ def main() -> None:
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # read before this run can overwrite it (SPARK_GRAFT_BENCH_COMMIT=1)
-    cpu_prior = _prior_cpu_s(sf_val)
-
     spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
+    # read before this run can overwrite it (SPARK_GRAFT_BENCH_COMMIT=1)
+    cpu_prior = _prior_cpu_s(sf_val, cpus)
     queries = all_queries()
     warm_up(spark, queries, sf_dir)
     passes: dict[str, list[float]] = {}
@@ -300,7 +305,7 @@ def main() -> None:
         timings[name] = (
             round(statistics.median(runs), 4) if runs else float("nan")
         )
-    flagged = _flag_regressions(timings, _prior_round_queries(sf_val))
+    flagged = _flag_regressions(timings, _prior_round_queries(sf_val, cpus))
     line = _contract_line(
         timings, sf_val, loads, flagged, _cpu_medians(loads), cpu_prior
     )
@@ -318,6 +323,7 @@ def main() -> None:
         "queries_load": {k: v for k, v in sorted(loads.items())},
         "flagged_vs_prior": flagged,
         "sf": sf_val,
+        "cpus": cpus,
     }
     try:
         import pathlib

@@ -107,6 +107,16 @@ class HybridRag:
             tokenizer=fts.normalized_tokens,
         )
 
+    def release(self) -> None:
+        """Release every serving cache this instance pinned: trail
+        views, FTS index and note vectors. Idempotent; a later ask
+        recomputes what it reads."""
+        for trails, _ in self._trail_views.values():
+            cache.release(trails)
+        self._trail_views.clear()
+        self.fts_index.release()
+        cache.release_frame(self.notes)
+
     # -- graph star patterns (Cypher `-[*1..4]-`, rag.py graph branch) -----
     def _materialize_trail_views(self, sql: str, max_hops: int = 4) -> None:
         """The text2sql surface for Cypher variable-length patterns:

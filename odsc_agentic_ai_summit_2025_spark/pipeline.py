@@ -14,7 +14,11 @@ the partitioning, and the steps are one lazy program:
 ``build_rag_pipeline`` wires it with optional guardrails, metering,
 and tracing; everything downstream (golden QA, judge metrics, usage
 tables) consumes the returned handle. Each stage is also usable on
-its own — this module adds no logic, only the composition.
+its own — this module adds no logic, only the composition and the
+cache lifetimes: the extracted records are persisted per build (the
+reference's extracted_fhir.json), so every graph table reads one
+extraction, and ``RagPipeline.release()`` frees what the pipeline
+pinned.
 """
 
 from __future__ import annotations
@@ -29,11 +33,16 @@ from pyspark.sql import functions as F
 class RagPipeline:
     """Handle to the built artifacts."""
 
-    extracted: DataFrame  # EXTRACTED_FHIR rows (lazy)
+    # EXTRACTED_FHIR rows; persisted (filled by the first action) unless
+    # the caller passed them in
+    extracted: DataFrame
     graph: object  # operators.graph.FhirGraph (views registered)
     rag: object  # llm.rag.HybridRag — call .ask(question)
     collector: object | None  # metering.UsageCollector when metered
     tracer: object  # metering.SpanTracer
+    # caches this pipeline owns besides the rag's (the persisted
+    # extraction); a caller-supplied ``extracted`` is never listed
+    cache_sources: tuple = ()
 
     def usage_df(self, spark: SparkSession):
         if self.collector is None:
@@ -42,6 +51,17 @@ class RagPipeline:
 
     def spans_df(self, spark: SparkSession):
         return self.tracer.to_df(spark)
+
+    def release(self) -> None:
+        """Release everything this pipeline pinned: the rag's serving
+        caches (trail views, note vectors, FTS index), then the
+        persisted extraction. Idempotent. The frames stay
+        usable — they recompute, re-running extraction, on the next
+        action."""
+        from .cache import release
+
+        self.rag.release()
+        release(*self.cache_sources)
 
 
 def build_rag_pipeline(
@@ -62,11 +82,23 @@ def build_rag_pipeline(
     object. Both default to the deterministic mock. ``extracted``
     short-circuits the extraction stage when the records already
     exist (the reference's idempotent re-ingest of
-    extracted_fhir.json). Extraction is never materialized: every
-    graph table and every ask re-runs the extraction ``mapInPandas``
-    (about 60 extraction calls per note per build and 12 per note per
-    ask). Passing an already-materialized ``extracted`` avoids that.
+    extracted_fhir.json); the caller owns that frame and it is left
+    as passed.
+
+    Otherwise the extracted records are persisted lazily (the first
+    action — a graph-table write, ``extracted.count()``, an ask —
+    fills the cache), so a build makes one extraction call per
+    extractor field per note however many graph tables read them,
+    and every table joins the same extraction even when the model is
+    not deterministic. The graph tables are not cached: each ask
+    derives the tables its SQL reads from the persisted records, at
+    the same cost on every ask. A cache filled by the first question
+    that scans a table made an ask's latency depend on the questions
+    before it, and filling all eleven at the first ask made that ask
+    about 2 s slower on 4 cores. ``RagPipeline.release()`` frees the
+    records and the rag's serving caches.
     """
+    from .cache import own
     from .llm.client import MockLLMClient
     from .llm.extract import extract_fhir, guarded_extract_fhir
     from .llm.metering import SpanTracer, UsageCollector
@@ -78,10 +110,14 @@ def build_rag_pipeline(
     collector = UsageCollector() if meter else None
     tracer = SpanTracer()
 
+    owned: tuple = ()
     with tracer.span("extract"):
         if extracted is None:
             runner = guarded_extract_fhir if guard_input else extract_fhir
-            extracted = runner(notes, client_factory=client_factory)
+            extracted = runner(notes, client_factory=client_factory).persist()
+            # own(x, x): the frame is its own release handle, like
+            # exact_unique in build_curation_pipeline
+            owned = (own(extracted, extracted),)
     with tracer.span("build_graph"):
         graph = build_graph(extracted)
     with tracer.span("build_rag"):
@@ -100,6 +136,7 @@ def build_rag_pipeline(
         rag=rag,
         collector=collector,
         tracer=tracer,
+        cache_sources=owned,
     )
 
 

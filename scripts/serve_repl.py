@@ -79,28 +79,32 @@ def main() -> None:
     print(f"[build] ready — {n_pat} patients in the graph. "
           f"Empty line or Ctrl-D exits.", flush=True)
 
-    while True:
-        try:
-            question = input("\nquestion> ").strip()
-        except EOFError:
-            break
-        if not question:
-            break
-        ans = pipe.rag.ask(question)
-        # the reference UI's six visible artifacts, in its step order
-        print(f"[1/6] input guardrail: {ans.guardrail_action}"
-              + (f" (masked: {ans.masked_question})"
-                 if ans.masked_question != question else ""))
-        print(f"[2/6] pruned schema: {len(ans.pruned_schema)} chars")
-        ents = " ".join(f"{e['key']}={e['value']}" for e in ans.entities)
-        print(f"[3/6] entities: {ents or '(none)'}")
-        print(f"[4/6] generated SQL: {ans.sql or '(no SQL generated)'}")
-        if ans.graph_rows:
-            print(f"      graph rows: {ans.graph_rows[:10]}")
-        print(f"[5/6] graph answer:  {ans.graph_answer}")
-        print(f"      vector answer: {ans.vector_answer} "
-              f"(context notes: {ans.context_ids})")
-        print(f"[6/6] final answer:  {ans.final_answer}")
+    try:
+        while True:
+            try:
+                question = input("\nquestion> ").strip()
+            except EOFError:
+                break
+            if not question:
+                break
+            ans = pipe.rag.ask(question)
+            # the reference UI's six visible artifacts, in its step order
+            print(f"[1/6] input guardrail: {ans.guardrail_action}"
+                  + (f" (masked: {ans.masked_question})"
+                     if ans.masked_question != question else ""))
+            print(f"[2/6] pruned schema: {len(ans.pruned_schema)} chars")
+            ents = " ".join(f"{e['key']}={e['value']}" for e in ans.entities)
+            print(f"[3/6] entities: {ents or '(none)'}")
+            print(f"[4/6] generated SQL: {ans.sql or '(no SQL generated)'}")
+            if ans.graph_rows:
+                print(f"      graph rows: {ans.graph_rows[:10]}")
+            print(f"[5/6] graph answer:  {ans.graph_answer}")
+            print(f"      vector answer: {ans.vector_answer} "
+                  f"(context notes: {ans.context_ids})")
+            print(f"[6/6] final answer:  {ans.final_answer}")
+    finally:
+        # the persisted extraction and the serving caches
+        pipe.release()
 
     if pipe.collector is not None:
         t = pipe.collector.totals()

@@ -21,3 +21,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+FHIR_NOTES = 120
+
+
+@pytest.fixture(scope="session")
+def fhir_corpus(spark):
+    """A seeded FHIR note corpus from ``ragbench.fhirgen`` (imported,
+    not copied): ``notes`` as a [record_id, note] frame, the
+    ground-truth ``records`` the mock extractor recovers field for
+    field and the ``golden`` (question, expected) pairs. It stands in
+    for the reference data set where that is absent."""
+    from types import SimpleNamespace
+
+    from ragbench import fhirgen
+
+    notes, records = fhirgen.generate(FHIR_NOTES, seed=7)
+    return SimpleNamespace(
+        notes=spark.createDataFrame(notes, "record_id long, note string"),
+        records=records,
+        golden=fhirgen.Graph(records).golden(),
+    )

@@ -6,6 +6,7 @@ suite, not only by full bench runs."""
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
@@ -14,8 +15,10 @@ sys.path.insert(0, ".")
 import bench
 
 
-def _write(root, name, sf, queries, parsed=True):
-    body = {"parsed": {"sf": sf, "queries": queries}} if parsed else {}
+def _write(root, name, sf, queries, parsed=True, cpus=32):
+    body = {"cpus": cpus, "sf": sf}
+    if parsed:
+        body["parsed"] = {"sf": sf, "queries": queries}
     (root / name).write_text(json.dumps(body))
 
 
@@ -24,11 +27,11 @@ def test_prior_round_picks_latest_at_same_sf(tmp_path):
     _write(tmp_path, "BENCH_r09.json", 0.1, {"q01": 1.5})
     # a later round at a DIFFERENT sf must not shadow the 0.1 baseline
     _write(tmp_path, "BENCH_r11.json", 0.01, {"q01": 0.2})
-    got = bench._prior_round_queries(0.1, root=tmp_path)
+    got = bench._prior_round_queries(0.1, 32, root=tmp_path)
     assert got == {"q01": 1.5}
-    assert bench._prior_round_queries(0.01, root=tmp_path) == {"q01": 0.2}
+    assert bench._prior_round_queries(0.01, 32, root=tmp_path) == {"q01": 0.2}
     # no baseline at an unmeasured sf → empty → nothing can flag
-    assert bench._prior_round_queries(0.001, root=tmp_path) == {}
+    assert bench._prior_round_queries(0.001, 32, root=tmp_path) == {}
 
 
 def test_prior_round_skips_unparsed_and_nulls(tmp_path):
@@ -36,11 +39,37 @@ def test_prior_round_skips_unparsed_and_nulls(tmp_path):
     _write(
         tmp_path, "BENCH_r08.json", 0.1, {"q01": 1.0, "q02": None}
     )
-    got = bench._prior_round_queries(0.1, root=tmp_path)
+    got = bench._prior_round_queries(0.1, 32, root=tmp_path)
     # the unparsed r09 falls through to r08; null cells are dropped
     assert got == {"q01": 1.0}
     (tmp_path / "BENCH_r07.json").write_text("not json")
-    assert bench._prior_round_queries(0.1, root=tmp_path) == {"q01": 1.0}
+    assert bench._prior_round_queries(0.1, 32, root=tmp_path) == {"q01": 1.0}
+
+
+def test_prior_round_matches_core_count(tmp_path):
+    """A later round at another core count must not shadow this
+    count's baseline, and ``_c<M>`` files are read."""
+    _write(tmp_path, "BENCH_r13_c8.json", 0.1, {"q01": 3.0}, cpus=8)
+    _write(tmp_path, "BENCH_r14.json", 0.1, {"q01": 1.0})
+    _write(tmp_path, "BENCH_r15_c8.json", 0.1, {"q01": 2.0}, cpus=8)
+    assert bench._prior_round_queries(0.1, 32, root=tmp_path) == {"q01": 1.0}
+    assert bench._prior_round_queries(0.1, 8, root=tmp_path) == {"q01": 2.0}
+    assert bench._prior_round_queries(0.1, 4, root=tmp_path) == {}
+
+
+def test_prior_round_committed_artifacts_by_core_count():
+    """On the committed BENCH_r*.json: 8 cores pick BENCH_r14_c8, 32
+    cores BENCH_r14, and 4 cores (never driver-benched) nothing."""
+    def medians(name):
+        path = pathlib.Path(bench.__file__).resolve().parent / name
+        qs = json.loads(path.read_text())["parsed"]["queries"]
+        return {k: v for k, v in qs.items() if isinstance(v, (int, float))}
+
+    c8, c32 = medians("BENCH_r14_c8.json"), medians("BENCH_r14.json")
+    assert c8 != c32
+    assert bench._prior_round_queries(0.1, 8) == c8
+    assert bench._prior_round_queries(0.1, 32) == c32
+    assert bench._prior_round_queries(0.1, 4) == {}
 
 
 def test_flag_rule_and_ordering():
@@ -85,17 +114,28 @@ def test_flag_rule_zero_prior_can_flag():
 
 
 def test_prior_cpu_s_reads_committed_detail_at_same_sf(tmp_path):
-    assert bench._prior_cpu_s(0.1, root=tmp_path) == {}
+    assert bench._prior_cpu_s(0.1, 8, root=tmp_path) == {}
     (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps({
         "sf": 0.1,
+        "cpus": 8,
         "queries_load": {
             "q01_a": [{"cpu_s": 1.0}, {"cpu_s": 3.0}, {"cpu_s": 2.0}],
             # recorded before cpu_s existed: no prior
             "q02_b": [{"la1": 0.5}],
         },
     }))
-    assert bench._prior_cpu_s(0.1, root=tmp_path) == {"q01_a": 2.0}
-    assert bench._prior_cpu_s(0.01, root=tmp_path) == {}
+    assert bench._prior_cpu_s(0.1, 8, root=tmp_path) == {"q01_a": 2.0}
+    assert bench._prior_cpu_s(0.01, 8, root=tmp_path) == {}
+    # another core count has no comparable CPU-seconds
+    assert bench._prior_cpu_s(0.1, 4, root=tmp_path) == {}
+
+
+def test_prior_cpu_s_needs_recorded_core_count(tmp_path):
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps({
+        "sf": 0.1,
+        "queries_load": {"q01_a": [{"cpu_s": 1.0}]},
+    }))
+    assert bench._prior_cpu_s(0.1, 4, root=tmp_path) == {}
 
 
 def _strict_json(s):

@@ -370,13 +370,11 @@ def test_rag_emits_spans_usage_and_guardrail_traces(spark):
     assert all(t.rule == "email" for t in rag.guardrail_traces)
 
 
-@pytest.mark.skipif(
-    not __import__("os").path.exists(_NOTES),
-    reason="reference data not present",
-)
-def test_build_rag_pipeline_end_to_end(spark):
+def test_build_rag_pipeline_end_to_end(spark, request):
     """run.sh-equivalent composition: notes → extract → graph → RAG,
-    answering a golden question with usage + span tables populated."""
+    answering a golden question with usage + span tables populated.
+    Runs on the reference notes when present, else on the seeded
+    ``fhir_corpus``."""
     from odsc_agentic_ai_summit_2025_spark.pipeline import (
         build_rag_pipeline,
     )
@@ -384,17 +382,23 @@ def test_build_rag_pipeline_end_to_end(spark):
     from odsc_agentic_ai_summit_2025_spark.schemas import NOTES
     from odsc_agentic_ai_summit_2025_spark.sources.io import read_json_records
 
-    notes = read_json_records(spark, _NOTES, NOTES).filter(
-        "record_id <= 300"
-    )
+    if __import__("os").path.exists(_NOTES):
+        notes = read_json_records(spark, _NOTES, NOTES).filter(
+            "record_id <= 300"
+        )
+        n_notes = 300
+    else:
+        corpus = request.getfixturevalue("fhir_corpus")
+        notes, n_notes = corpus.notes, len(corpus.records)
     p = build_rag_pipeline(spark, notes)
     # graph views are registered and queryable
     assert spark.sql("SELECT count(*) FROM patient").collect()[0][0] > 0
     # extraction emitted rows for the slice
-    assert p.extracted.count() == 300
+    assert p.extracted.count() == n_notes
     case = GOLDEN_CASES[5]  # category-count question, graph-answerable
     ans = p.rag.ask(case.question)
     assert ans.final_answer  # non-empty through the full path
     assert p.usage_df(spark).count() >= 5
     names = {s.name for s in p.tracer.spans}
     assert {"extract", "build_graph", "build_rag", "ask"} <= names
+    p.release()
