@@ -82,16 +82,7 @@ def embed(
     # input both the JVM expression and the Arrow kernel would
     # otherwise run on one core (the exchange sits above any project
     # added after it, so ordering here decides where the work lands).
-    # cost=128: the tokenize+poly-hash+scatter-add chain is far from
-    # hash-scale per byte — measured r13 on q63 (documents, 0.6 MB
-    # parquet): the size-adaptive default (cost=1) fanned to ONE
-    # split and serialized ~2.6 s of embed+bucketize kernel onto one
-    # core (q63 quiet min 5.53; stage trace: a 1.90 s and a 0.68 s
-    # single-task stage). cost=128 (≈10 splits there) measured q63
-    # 3.81 / q51 0.92 quiet-min vs 3.85 / 1.31 at cost=500 (full
-    # 32-way fan: q63 4.21, q51 ~1.0) — the middle fan-out wins on
-    # both the single-heavy-kernel and the many-small-stages shapes.
-    df = ensure_min_partitions(df, cost=128.0)
+    df = ensure_min_partitions(df, cost="gram")
 
     # JVM side stops at tokenization (codegen'd regexp): the rolling
     # char hash moves into the Arrow kernel as a vectorized

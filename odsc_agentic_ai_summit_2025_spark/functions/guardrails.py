@@ -274,14 +274,9 @@ def pii_trace_df(
     and appends one result each)."""
     masked = mask_pii(F.col(text_col))
     counts = pii_counts(F.col(text_col))
-    # fan the regex battery to the data (r14, guide §2): the guarded
-    # PII patterns are ~100x hash-scale work per input byte, so the
-    # single-row-group gate parquet ran the whole battery on one core
-    # (1.04 s serial, q67 stage trace); cost=128 is the measured class
-    # shared with the gram/embed stages. No-op at scale; row-local.
     from ..sources.io import ensure_min_partitions
 
-    df = ensure_min_partitions(df, cost=128.0)
+    df = ensure_min_partitions(df, cost="gram")
     # Stage the per-rule counts as plain columns BELOW the explode:
     # each count appears three times in its rule struct (two CASE
     # thresholds + n_matches), and generator expressions get no

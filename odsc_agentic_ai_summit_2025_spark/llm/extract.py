@@ -63,11 +63,8 @@ def extract_fhir(
 
     from ..sources.io import ensure_min_partitions
 
-    # cost: the 3-protocol-call regex battery measured ~350x a
-    # hash-scale kernel per byte (r13 A/B: 26.9 s on one split vs
-    # 2.85 s fanned out at sf0.1) — size splits accordingly
     return ensure_min_partitions(
-        notes.select("record_id", "note"), cost=500.0
+        notes.select("record_id", "note"), cost="heavy"
     ).mapInPandas(run, EXTRACTED_FHIR)
 
 
@@ -145,14 +142,8 @@ def extract_fhir_with_usage(
 
     from ..sources.io import ensure_min_partitions
 
-    # cost=1000, deliberately ABOVE extract_fhir's 500: the metering
-    # wrapper drives all three protocol calls per note (usage rows),
-    # where the guarded path short-circuits some — r13 same-protocol
-    # A/B on q68: min 1.905 at 1000 vs 2.359 at 500, while the
-    # cheaper q106/q64 extraction paths measured better AT 500
-    # (1.41/0.71 vs 1.71/0.88), so only this site gets the bump
     return ensure_min_partitions(
-        notes.select("record_id", "note"), cost=1000.0
+        notes.select("record_id", "note"), cost="heavy"
     ).mapInPandas(run, out_schema)
 
 

@@ -239,11 +239,7 @@ def dsir_scores(
             F.col(source_col),
             _word_ngrams(tokens(F.col(text_col)), n).alias("_grams"),
         ),
-        # tokenize + bigram build + explode is ~100x hash-scale per
-        # input byte — a single-row-group gate input otherwise runs
-        # the whole gram stage on one core (measured r14; same class
-        # as the embed kernel's 128)
-        cost=128.0,
+        cost="gram",
     )
     from ..cache import own
 
@@ -339,7 +335,7 @@ def dsir_model(
                 F.col(source_col),
                 _word_ngrams(tokens(F.col(text_col)), n).alias("_grams"),
             ),
-            cost=128.0,  # gram-stage per-byte cost, see dsir_scores
+            cost="gram",
         )
         .select(source_col, F.explode("_grams").alias("gram"))
         .groupBy("gram")
@@ -392,7 +388,7 @@ def dsir_score_with_model(
                 F.col(id_col),
                 _word_ngrams(tokens(F.col(text_col)), n).alias("_grams"),
             ),
-            cost=128.0,  # gram-stage per-byte cost, see dsir_scores
+            cost="gram",
         )
         .select(id_col, F.explode("_grams").alias("gram"))
         .groupBy(id_col, "gram")
@@ -430,7 +426,7 @@ def dsir_model_cms(
             F.col(source_col),
             _word_ngrams(tokens(F.col(text_col)), n).alias("_grams"),
         ),
-        cost=128.0,  # gram-stage per-byte cost, see dsir_scores
+        cost="gram",
     ).select(source_col, F.explode("_grams").alias("gram"))
     is_t = (
         F.when(F.col(source_col) == target_source, F.lit(1))
@@ -510,7 +506,7 @@ def dsir_score_with_cms_model(
                 F.col(id_col),
                 _word_ngrams(tokens(F.col(text_col)), n).alias("_grams"),
             ),
-            cost=128.0,  # gram-stage per-byte cost, see dsir_scores
+            cost="gram",
         )
         .select(id_col, F.explode("_grams").alias("gram"))
         .groupBy(id_col, "gram")
@@ -750,12 +746,7 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # NULL text → NULL token array → every stat NULL; the oracle's
     # explode+join form drops such docs entirely, so drop them here
     # too (row-set parity, and a null-stats row is useless anyway).
-    # cost=128: the longest-equal-run aggregate fold + two ngram
-    # array ops are interpreted per-element — measured r13 (q72,
-    # documents 0.6 MB parquet): cost=1 fanned to ONE split and
-    # serialized ~0.85 s of fold battery (quiet min 1.05 vs 0.64 at
-    # full fan-out); cost=128 restores the r12-class 0.6 s.
-    out = ensure_min_partitions(df, cost=128.0).filter(toks.isNotNull()).select(
+    out = ensure_min_partitions(df, cost="gram").filter(toks.isNotNull()).select(
         F.col(id_col),
         F.size(g2).alias("_n2"),
         F.size(F.array_distinct(g2)).alias("_n2d"),

@@ -275,11 +275,7 @@ def simhash_table(
     # inside the kernel; drop such rows like the MinHash tier does
     # (the oracle twins filter identically)
     hashed = (
-        # cost: the JVM-side per-token char_poly_hash transform plus
-        # the bit-plane kernel measured ~0.7 s serial on sf0.1's
-        # ~3 MB of text (r13 stage profile) — ~4x hash-scale per
-        # byte, doubled for the parquet-compressed size estimate
-        ensure_min_partitions(df, cost=8.0)
+        ensure_min_partitions(df)
         .withColumn("_th", token_hashes(F.col(text_col)))
         .filter(F.col("_th").isNotNull())
     )
@@ -389,14 +385,13 @@ def simhash_near_pairs(
     # Input-byte-sized planning (AQE coalescing, broadcast-probe
     # partitioning) therefore serializes the generate+verify stage
     # onto one core — measured 7.3 s in one task (r13 stage profile);
-    # fanned, the same work spreads across the cluster. cost=512
-    # encodes that per-INPUT-byte blowup for the size-adaptive split.
+    # fanned, the same work spreads across the cluster.
     a = ensure_min_partitions(
         banded.select(
             F.col(id_col).alias("a_id"), F.col("_sh").alias("_sa"),
             "ci", "cv",
         ),
-        cost=512.0,
+        cost="heavy",
     )
     b = banded.select(
         F.col(id_col).alias("b_id"), F.col("_sh").alias("_sb"), "ci", "cv"

@@ -367,13 +367,7 @@ def distinct_ngram_diversity(
     from ..sources.io import ensure_min_partitions
     from .curation import _word_ngrams
 
-    # fan the gram fan-out stage to the data (r14, guide §2): the
-    # tokenize + 3-n gram build + explode is ~100x hash-scale work
-    # per input byte, and a single-row-group gate parquet otherwise
-    # runs it on ONE core (measured 1.7-2.2 s serial vs 0.45-0.6 s at
-    # 8 splits, sf0.1). cost=128 matches the embed kernel's measured
-    # class; at scale the input arrives pre-split and this is a no-op.
-    df = ensure_min_partitions(df.select(group_col, text_col), cost=128.0)
+    df = ensure_min_partitions(df.select(group_col, text_col), cost="gram")
     toks = tokens(F.col(text_col))
     def _tag(n: int):
         # single-param lambda on purpose: pyspark reads a 2-param

@@ -204,16 +204,13 @@ def q75_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     bloom = bloom_build(grams(bench, "bench_id").select("gram").distinct(), "gram")
-    # fan the corpus-side gram+probe stage to the data (r14, guide
-    # §2): tokenize + 3-gram build + md5 probes are ~100x hash-scale
-    # per input byte, and the single-row-group gate parquet ran the
-    # whole stage on one core (1.2 s serial, stage trace); cost=128 is
-    # the measured gram-stage class. No-op at scale (pre-split input);
-    # round-robin placement cannot change the per-doc counts.
+    # fan the corpus-side gram+probe stage (tokenize + 3-gram build +
+    # md5 probes) to the data; round-robin placement cannot change the
+    # per-doc counts
     from ..sources.io import ensure_min_partitions
 
     corpus_fanned = ensure_min_partitions(
-        corpus.select("doc_id", "text"), cost=128.0
+        corpus.select("doc_id", "text"), cost="gram"
     )
     return bloom_probe_counts(
         grams(corpus_fanned, "doc_id"), bloom, "gram", "doc_id"

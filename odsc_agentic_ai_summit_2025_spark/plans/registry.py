@@ -44,11 +44,14 @@ class Query:
 _CHANGED = (
     "q63_neardup_lsh",
     "q66_dedup_clusters",
+    "q78_simhash_pairs",
     "q82_semantic_dedup",
+    "q89_editdist_pairs",
     "q90_triangle_counts",
     "q91_pagerank",
     "q99_quality_reps",
     "q100_curation_pipeline",
+    "q114_dsir_stream_scoring",
 )
 
 _REPO_ROOT = Path(__file__).resolve().parents[2]

@@ -116,11 +116,29 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
-def ensure_min_partitions(
-    df: DataFrame,
-    min_parts: int | None = None,
-    cost: float = 1.0,
-) -> DataFrame:
+#: Per-byte CPU cost of a kernel stage, relative to a hash-scale
+#: kernel, by kernel class. :func:`ensure_min_partitions` divides its
+#: 8 MB split by the class cost. Call sites name a class; they never
+#: carry a number of their own.
+KERNEL_COST = {
+    # hashing, MinHash/SimHash signatures, GEMM: 8 MB splits keep
+    # tasks in the 0.1-1 s range on one core
+    "hash": 1,
+    # tokenize + n-gram build, regex batteries, interpreted per-element
+    # folds: ~100x hash scale per byte. Left on one split, the embed,
+    # gram and PII stages ran 1.0-2.6 s serial at sf0.1 (r13/r14 stage
+    # traces); 128 (about 10 splits there) measured faster than both
+    # 1 and full fan-out (r13 q63 quiet min 3.81 s vs 5.53 s and 4.21 s).
+    "gram": 128,
+    # three LLM-protocol calls per note, or a join that emits
+    # quadratically many candidate rows per input byte: extraction
+    # measured 26.9 s on one split vs 2.85 s fanned at sf0.1 (r13 A/B),
+    # and the SimHash band probe ran 7.3 s in one task
+    "heavy": 1000,
+}
+
+
+def ensure_min_partitions(df: DataFrame, *, cost: str = "hash") -> DataFrame:
     """Fan a kernel stage's input out to a scale-appropriate split count.
 
     Arrow kernels (``mapInPandas`` / pandas UDF stages) inherit the
@@ -135,31 +153,23 @@ def ensure_min_partitions(
 
     The fan-out target is SIZE-ADAPTIVE (optimization guide §2: derive
     partitioning from input size, not a constant tuned for one mode):
-    ``ceil(estimated_bytes / 8 MB)`` splits, clamped to
-    ``[1, defaultParallelism]``. A gate-scale corpus (hundreds of KB)
-    therefore runs its kernel in the scan stage itself — no fan-out
-    exchange, no per-task Python worker forks beyond the splits the
-    data actually warrants (measured r13: a 32-task mapInPandas stage
-    costs ~0.35 s more than a right-sized one on this host) — while
-    anything approaching ``defaultParallelism × 8 MB`` fans out
-    exactly as before. Per-byte kernel cost here is
-    tokenize/hash/GEMM-scale, so 8 MB splits keep tasks in the
-    0.1-1 s range on one core. Callers with unusually heavy
-    kernels pass ``cost`` — the kernel's per-byte cost relative to
-    that hash-scale assumption (e.g. the regex-battery extraction
-    kernel measured ~350x hash speed per byte, r13 A/B: 26.9 s serial
-    vs 2.85 s fanned at sf0.1) — which divides the split size so the
-    fan-out matches the actual CPU-seconds in the stage, at any scale.
-    An explicit ``min_parts`` bypasses the estimate entirely.
+    ``ceil(estimated_bytes / (8 MB / KERNEL_COST[cost]))`` splits,
+    clamped to ``[1, defaultParallelism]``; an unknown size fans out
+    fully. A gate-scale corpus (hundreds of KB) of a hash-scale kernel
+    therefore runs in the scan stage itself — no fan-out exchange, no
+    per-task Python worker forks beyond the splits the data actually
+    warrants (measured r13: a 32-task mapInPandas stage costs ~0.35 s
+    more than a right-sized one) — while heavier kernel classes split
+    finer, so the fan-out follows the CPU-seconds in the stage at any
+    scale.
     """
-    if min_parts is None:
-        cap = df.sparkSession.sparkContext.defaultParallelism
-        est = _plan_size_bytes(df)
-        if est is None:
-            min_parts = cap  # unknown size: full fan-out
-        else:
-            split_bytes = max(1, int((8 << 20) / cost))
-            min_parts = max(1, min(cap, -(-est // split_bytes)))
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    est = _plan_size_bytes(df)
+    if est is None:
+        min_parts = cap
+    else:
+        split_bytes = (8 << 20) // KERNEL_COST[cost]
+        min_parts = max(1, min(cap, -(-est // split_bytes)))
     if df.rdd.getNumPartitions() >= min_parts:
         return df
     return df.repartition(min_parts)

@@ -578,21 +578,18 @@ def pack_sequences_stream(
     from .. import cache
     from ..operators.textops import pack_sequences
 
-    stream = _docs_stream(
-        spark, docs_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _pack(batch_df: DataFrame, batch_id: int) -> None:
+    def _pack(batch_df: DataFrame, batch_id: int) -> DataFrame:
         out = pack_sequences(batch_df, "text", "doc_id", seq_len=seq_len)
-        try:
-            sink(out.withColumn("batch_id", F.lit(batch_id)), batch_id)
-        finally:
-            cache.release(out)
+        return cache.own(
+            out.withColumn("batch_id", F.lit(batch_id)), *cache.handles(out)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_pack)
-        .trigger(availableNow=True)
-        .start()
+    return _per_batch_stream(
+        _docs_stream(
+            spark, docs_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        _pack,
+        sink,
     )
 
 
@@ -635,25 +632,16 @@ def dsir_score_stream(
     from ..operators.curation import dsir_score_with_model
 
     model = model.persist()
-    stream = _docs_stream(
-        spark, docs_path, max_files_per_trigger=max_files_per_trigger
+    return _per_batch_stream(
+        _docs_stream(
+            spark, docs_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        lambda batch_df, _: dsir_score_with_model(
+            batch_df, model, "text", "doc_id", n=n, cap_e4=cap_e4
+        ),
+        sink,
+        dsirModelHandle=model,
     )
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            dsir_score_with_model(
-                batch_df, model, "text", "doc_id", n=n, cap_e4=cap_e4
-            ),
-            batch_id,
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(_score)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.dsirModelHandle = model
-    return query
 
 
 def dsir_score_cms_stream(
@@ -680,29 +668,49 @@ def dsir_score_cms_stream(
     Returns the started StreamingQuery (availableNow trigger); the
     pinned sketch handle is exposed as ``query.dsirModelHandle`` for
     the caller to release after ``awaitTermination``."""
-    from ..cache import release
     from ..operators.curation import dsir_score_with_cms_model
 
     cms = cms.persist()
-    stream = _docs_stream(
-        spark, docs_path, max_files_per_trigger=max_files_per_trigger
+    return _per_batch_stream(
+        _docs_stream(
+            spark, docs_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        lambda batch_df, _: dsir_score_with_cms_model(
+            batch_df, cms, "text", "doc_id", n=n, cap_e4=cap_e4
+        ),
+        sink,
+        dsirModelHandle=cms,
     )
 
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        scored = dsir_score_with_cms_model(
-            batch_df, cms, "text", "doc_id", n=n, cap_e4=cap_e4
-        )
+
+def _per_batch_stream(stream, score, sink, **handles):
+    """The shared delivery skeleton for every stateless per-batch twin
+    (sequence packing, DSIR scoring, semantic decontamination).
+
+    ``score(batch_df, batch_id)`` builds the micro-batch's result and
+    ``sink(result, batch_id)`` must materialize it: the caches the
+    result owns are released once the sink returns or raises, so no
+    delivery leaks its persisted intermediates. ``handles`` — the
+    frames pinned for the whole run — are set as attributes on the
+    started StreamingQuery (availableNow trigger) for the caller to
+    release after ``awaitTermination``.
+    """
+    from .. import cache
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        out = score(batch_df, batch_id)
         try:
-            sink(scored, batch_id)
+            sink(out, batch_id)
         finally:
-            release(scored)
+            cache.release(out)
 
     query = (
-        stream.writeStream.foreachBatch(_score)
+        stream.writeStream.foreachBatch(_batch)
         .trigger(availableNow=True)
         .start()
     )
-    query.dsirModelHandle = cms
+    for name, frame in handles.items():
+        setattr(query, name, frame)
     return query
 
 
@@ -971,29 +979,17 @@ def semantic_decontam_stream(
 
     bench_vectors = bench_vectors.persist()
     d = dim or DEFAULT_DIM
-    stream = _docs_stream(
-        spark, docs_path, max_files_per_trigger=max_files_per_trigger
+    return _per_batch_stream(
+        _docs_stream(
+            spark, docs_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        lambda batch_df, _: semantic_decontamination(
+            embed(batch_df.select(id_col, "text"), "text", vec_col, d),
+            bench_vectors, vec_col, id_col, threshold=threshold,
+        ),
+        sink,
+        benchHandle=bench_vectors,
     )
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        embedded = embed(
-            batch_df.select(id_col, "text"), "text", vec_col, d
-        )
-        sink(
-            semantic_decontamination(
-                embedded, bench_vectors, vec_col, id_col,
-                threshold=threshold,
-            ),
-            batch_id,
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(_gate)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.benchHandle = bench_vectors
-    return query
 
 
 def ngram_novelty_stream(

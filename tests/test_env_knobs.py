@@ -3,7 +3,9 @@
 Tuning values are constants or per-call parameters; only where the
 engine runs (cores, driver memory) and the opt-in debug check are read
 from the environment. A new ``SPARK_GRAFT_*`` read fails this test,
-in the package and in the bench harness alike.
+in the package and in the bench harness alike. The kernel fan-out cost
+is one of the classes declared in ``sources/io.py:KERNEL_COST``; a call
+site that sets its own number fails here too.
 """
 
 from __future__ import annotations
@@ -65,3 +67,28 @@ def test_harness_reads_only_data_path_and_commit_switch():
     assert read == {"SF_DIR", "BENCH_COMMIT"}, sorted(read)
     read = _graft_reads(sorted((repo / "scripts").glob("*.py")))
     assert read == set(), sorted(read)
+
+
+def test_fanout_cost_is_a_declared_class():
+    """Every package call of ``ensure_min_partitions`` passes no cost or
+    a declared class name, and exactly three classes are declared."""
+    from odsc_agentic_ai_summit_2025_spark.sources.io import KERNEL_COST
+
+    assert len(set(KERNEL_COST.values())) == len(KERNEL_COST) == 3
+    calls, bad = 0, []
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name != "ensure_min_partitions":
+                continue
+            calls += 1
+            cost = [k.value for k in node.keywords if k.arg == "cost"]
+            if len(node.args) != 1 or len(cost) != len(node.keywords) or any(
+                not (isinstance(c, ast.Constant) and c.value in KERNEL_COST)
+                for c in cost
+            ):
+                bad.append(f"{path.name}:{node.lineno}")
+    assert calls and not bad, bad

@@ -145,14 +145,24 @@ def test_approx_distinct_error_bound(spark, sf_dir):
 
 
 def test_ensure_min_partitions_noop_when_wide(spark):
+    """The size rule: an input already split as finely as its estimate
+    asks comes back as the same object; an under-split input fans out
+    to ceil(estimate / split) splits, capped at defaultParallelism, and
+    a costlier kernel class splits finer. ``range(n)`` is estimated at
+    8 bytes per row."""
     from odsc_agentic_ai_summit_2025_spark.sources.io import (
         ensure_min_partitions,
     )
 
-    wide = spark.range(1000).repartition(8)
-    assert ensure_min_partitions(wide, 4) is wide  # already wide: no-op
-    narrow = spark.range(1000).coalesce(1)
-    assert ensure_min_partitions(narrow, 4).rdd.getNumPartitions() == 4
+    cap = spark.sparkContext.defaultParallelism
+    wide = spark.range(1 << 24).repartition(cap)  # 128 MB: 16 hash splits
+    assert ensure_min_partitions(wide) is wide
+    narrow = spark.range(1 << 24).coalesce(1)
+    assert ensure_min_partitions(narrow).rdd.getNumPartitions() == min(cap, 16)
+    small = spark.range(1 << 16).coalesce(1)  # 512 KB: under one hash split
+    assert ensure_min_partitions(small) is small
+    fanned = ensure_min_partitions(small, cost="gram")  # 64 KB gram splits
+    assert fanned.rdd.getNumPartitions() == min(cap, 8)
 
 
 def test_chunking_covers_all_tokens(spark, sf_dir):
