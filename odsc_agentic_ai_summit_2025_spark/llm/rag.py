@@ -14,9 +14,10 @@ Driver-side orchestration around Spark-built artifacts:
 
 Steps 2-4/6 are one LLM round-trip each (driver-side, injectable
 client); 5a/5b are Spark jobs. The reference runs 5a/5b as concurrent
-asyncio tasks; submitting the two Spark actions sequentially computes
-the same result (latency overlap is a serving concern, and both
-branches read only precomputed artifacts).
+asyncio tasks; here the two Spark actions run one after the other.
+Both branches read only precomputed artifacts, so the result is the
+same, but an ask pays the sum of the two branch latencies rather
+than the larger of them.
 """
 
 from __future__ import annotations
@@ -169,9 +170,13 @@ class HybridRag:
         query_text = " ".join(e["value"] for e in entities)
         terms = fts.normalize_query_terms(query_text)
         bm = fts.bm25_topk_indexed(self.fts_index, terms, k=20)
+        # one row from a one-partition range: the plan carries a size
+        # estimate, so the embed's fan-out check keeps it on one task
+        # (a createDataFrame row has none and fans out to
+        # defaultParallelism Python tasks)
         qdf = embed(
-            self.spark.createDataFrame(
-                [(0, query_text)], "qid long, q string"
+            self.spark.range(1, numPartitions=1).select(
+                F.col("id").alias("qid"), F.lit(query_text).alias("q")
             ),
             "q",
             "vector",

@@ -5,32 +5,27 @@ near-dup) emit EDGES; deduplication needs the transitive CLUSTERS —
 "keep one document per component". This is the step between "found
 339 near-dup pairs" and an actual keep/drop decision list.
 
-Two algorithms, one contract ([id, cluster_id] with cluster_id = the
+Two paths, one contract ([id, cluster_id] with cluster_id = the
 minimum id reachable from id):
 
-- **min-label propagation + pointer jumping** (default): each round
-  is two joins + one aggregation keyed by vertex id; the jump
-  (label ← label(label)) gives O(log diameter) convergence. Right
-  for dedup-cluster topology (many small components). Its weakness:
-  a GIANT component makes the pointer-jump join hot on the
-  component-minimum label — every member probes the same key.
+- **driver solve** (graphs under ``DRIVER_BUDGET_BYTES``): the
+  distinct edge list is collected and labeled by vectorized numpy
+  min-label propagation + pointer jumping in one pass.
 - **large-star/small-star** (Kiveris et al., "Connected Components
-  in MapReduce and Beyond"): alternating rounds that re-point edges
-  at per-NODE minima — every shuffle key is a vertex id with the
-  graph's own degree distribution, never a component label, so a
-  giant component has no hot key beyond its (AQE-splittable) hub
-  degrees. O(log² n) rounds worst case; the scale fallback.
+  in MapReduce and Beyond"), the distributed reference: alternating
+  rounds that re-point edges at per-NODE minima — every shuffle key
+  is a vertex id with the graph's own degree distribution, never a
+  component label, so a giant component has no hot key beyond its
+  (AQE-splittable) hub degrees. O(log² n) rounds worst case, and
+  its convergence does not depend on how ids are ordered along a
+  component.
 
-``algorithm="auto"`` runs min-label and falls back to star when the
-iteration budget is exhausted instead of raising — the budget being
-exceeded IS the signal that the topology wants the star variant.
-
-Every round localCheckpoints its frame (lineage truncation — an
+Every round localCheckpoints its state (lineage truncation — an
 uncut plan tree doubles per iteration and the driver OOMs on plan
 analysis long before data is a problem) and RELEASES the previous
 round's blocks once the new round is materialized, so a session
-running many clusterings holds at most two rounds of label storage
-at any time (round-4; closes the r3 residue item).
+running many clusterings holds at most two rounds of edge state at
+any time.
 
 Determinism: labels are ids and every step is a min — the fixpoint
 is the component-minimum id regardless of partitioning or round
@@ -53,6 +48,12 @@ from ..cache import own, release_frame
 _EDGE_ROW_BYTES = 16 + 120
 _WEDGE_BYTES = 68
 
+# Large/small-star round budget: each round is one (large, small)
+# pair. A graph still short of the edge-set fixpoint after this many
+# rounds raises rather than return under-merged labels (see the
+# edge-consistency check in _star_components).
+_STAR_ROUNDS = 50
+
 
 def connected_components(
     pairs: DataFrame,
@@ -60,41 +61,33 @@ def connected_components(
     b_col: str = "b_id",
     vertices: DataFrame | None = None,
     id_col: str = "id",
-    max_iterations: int = 25,
-    algorithm: str = "auto",
     driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """[a, b] edge pairs → [id, cluster_id] with cluster_id = the
     minimum id reachable from ``id``.
 
     ``vertices`` (optional, one ``id_col`` column) adds isolated
-    nodes — they come back as their own singleton clusters.
-    ``algorithm``: ``"minlabel"`` (raises if not converged within
-    ``max_iterations``), ``"star"`` (large-star/small-star from the
-    start), or ``"auto"`` (min-label, star fallback on budget
-    exhaustion). The returned frame carries its backing checkpoint
-    via :mod:`..cache` — call ``cache.release(result)`` after the
-    consuming action in long-lived sessions.
+    nodes — they come back as their own singleton clusters. The
+    returned frame carries its backing checkpoint via :mod:`..cache`
+    — call ``cache.release(result)`` after the consuming action in
+    long-lived sessions.
 
-    ``driver_budget_bytes`` (``auto`` only, 0 disables): when the
+    ``driver_budget_bytes`` (0 forces the distributed path): when the
     DISTINCT symmetric edge set's footprint (``_EDGE_ROW_BYTES`` per
     row) fits, the component labels are solved on the driver in one
-    vectorized numpy pass over the collected edge list instead of the
-    iterative join loop — the same decision a planner makes when it
-    broadcasts a small join side (guide §1.2: choose the algorithm by
-    the data). The dedup graphs this operator sees are post-shuffle
-    CANDIDATE graphs — bounded by banding/trim guards, orders of
-    magnitude smaller than the corpus — so even at 100 TB they are
-    usually driver-sized; each fixpoint round otherwise costs 2-3 job
-    barriers whose driver-side latency dominates at any scale
-    (measured r13: q66 wall 4.1 s vs 2.3 s of job time across 49
-    jobs). Labels are the identical component-minimum ids
-    (property-tested against the distributed loop), the edge list is
-    evaluated exactly once (the same persist the loop uses), and
-    graphs over the budget take the loop unchanged.
+    vectorized numpy pass over the collected edge list — the same
+    decision a planner makes when it broadcasts a small join side
+    (guide §1.2: choose the algorithm by the data). The dedup graphs
+    this operator sees are post-shuffle CANDIDATE graphs — bounded by
+    banding/trim guards, orders of magnitude smaller than the corpus
+    — so even at 100 TB they are usually driver-sized, and each
+    distributed round costs job barriers whose driver-side latency
+    dominates at any scale. Graphs over the budget run
+    large-star/small-star, the distributed reference the driver
+    solve is property-tested against. Either way the edge list is
+    persisted and evaluated exactly once; the star path releases it
+    on every exit, a raise included.
     """
-    if algorithm not in ("auto", "minlabel", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     # symmetrize with ONE scan of `pairs` (explode both orientations
     # per row), not a self-union: the pair list is usually an
     # UNPERSISTED generator (the MinHash bucket join, a Jaccard
@@ -123,206 +116,27 @@ def connected_components(
         nodes = nodes.unionByName(
             vertices.select(F.col(id_col))
         ).distinct()
-    if algorithm == "star":
-        return own(
-            _star_components(edges, nodes, id_col, max_iterations), pairs
-        )
     edges = edges.persist()
-    if algorithm == "auto":
-        # the count materializes the same persist the loop would (the
-        # generator runs exactly once either way); the collect then
-        # reads cached blocks
-        arrays = driver_arrays(
-            edges, edges.count() * _EDGE_ROW_BYTES, driver_budget_bytes
-        )
-        if arrays is not None:
-            out = _driver_components(arrays, edges, nodes, id_col)
-            # the edge cache backs the output plan's `nodes` scan —
-            # it rides the result and frees with cache.release
-            return own(out, edges, pairs)
-    # lazy checkpoint: the convergence-sum collect below is the
-    # materializing action — 1 job for init, not 2
-    labels = nodes.withColumn(
-        "cluster_id", F.col(id_col)
-    ).localCheckpoint(eager=False)
-
-    def _label_sum(frame: DataFrame):
-        # labels only ever decrease, so the exact decimal sum is a
-        # strictly-decreasing convergence witness — no compare join.
-        # COUNT rides along for free: it sizes the loop's shuffle
-        # partitioning below without an extra job.
-        row = frame.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return row["s"], row["n"]
-
-    prev_sum, n_nodes = _label_sum(labels)
-    converged = False
-    # Scale-adaptive loop partitioning (optimization guide §2.2/§2.4:
-    # derive partition counts from input size, not a constant). Every
-    # round is 2-3 shuffles of an (id, label) long-pair table keyed by
-    # vertex id; under the session's fixed shuffle.partitions (=cpus,
-    # kept by the deliberate parallelismFirst=true default) a tiny
-    # dedup graph pays ~32 tasks × ~10 ms of pure scheduling per
-    # stage, ~0.35 s per checkpointed round (q100 stage trace, r13).
-    # 250k vertices per partition keeps reduce partitions in the
-    # tens-of-MB class; big graphs hit the defaultParallelism cap and
-    # behave exactly as before. Hash partition count cannot change a
-    # min fixpoint, so results are untouched. Restored in the finally.
-    sess = labels.sparkSession
-    _orig_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(
-        1,
-        min(
-            sess.sparkContext.defaultParallelism,
-            -(-int(n_nodes or 0) // 250_000),
-        ),
+    # the count materializes the persist both paths read (the
+    # generator runs exactly once either way); the collect then reads
+    # cached blocks
+    arrays = driver_arrays(
+        edges, edges.count() * _EDGE_ROW_BYTES, driver_budget_bytes
     )
-    # try/finally: the persisted edge table must not outlive the loop
-    # even when the fixpoint check raises (or any round fails), and
-    # the session's shuffle partitioning must be restored on any exit
+    if arrays is not None:
+        out = _driver_components(arrays, edges, nodes, id_col)
+        # the edge cache backs the output plan's `nodes` scan — it
+        # rides the result and frees with cache.release
+        return own(out, edges, pairs)
     try:
-        sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        # The cached edge table and the init label table inherited the
-        # SESSION's partitioning (the candidate generator's reduce
-        # outputs — cpus partitions); every round's map stage re-scans
-        # them, and since .rdd conversion executes AQE stages eagerly
-        # in Spark 4.1, each round paid a ~cpus-task map stage
-        # (~0.3 s wall at gate scale, q100 trace) just to read a few
-        # KB of cached blocks. A plan-level coalesce to loop_parts
-        # reads the SAME cached blocks (no second copy) with
-        # loop_parts tasks; skipped at scale, where loop_parts ==
-        # defaultParallelism and the real split must stay.
-        labels_store = labels  # the checkpointed frame releases target
-        edges_scan = edges
-        if loop_parts < sess.sparkContext.defaultParallelism:
-            edges_scan = edges.coalesce(loop_parts)
-            labels = labels.coalesce(loop_parts)
-        # the previous round's stepped table: it backs the LAZY jump
-        # checkpoint until the next round's sum materializes it, so
-        # its release is deferred exactly one round (r13 — see the
-        # one-job-per-round note at the jump below)
-        jump_input = None
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges_scan.join(
-                    labels.withColumnRenamed(id_col, "src"), "src"
-                )
-                .groupBy("dst")
-                .agg(F.min("cluster_id").alias("_nmin"))
-                .withColumnRenamed("dst", id_col)
-            )
-            # checkpointed BEFORE the self-join below, which would
-            # otherwise evaluate the step plan (a shuffle join + agg)
-            # once per side. Lazy: the convergence sum right after is
-            # the materializing action, so the round has exactly ONE
-            # job barrier (the sum computes the pending lazy jump and
-            # this round's step in one job).
-            stepped = (
-                labels.join(neighbor_min, id_col, "left")
-                .select(
-                    id_col,
-                    F.least(
-                        F.col("cluster_id"), F.coalesce("_nmin", "cluster_id")
-                    ).alias("cluster_id"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            cur_sum, _ = _label_sum(stepped)
-            # stepped is materialized → the previous round's label
-            # blocks (and the stepped table behind the now-computed
-            # lazy jump) back nothing live; release them now
-            release_frame(labels_store)
-            if jump_input is not None:
-                release_frame(jump_input)
-                jump_input = None
-            if cur_sum == prev_sum:
-                # the STEP changed nothing (sums of a pointwise-
-                # decreasing chain are equal ⇒ the frames are equal):
-                # over SYMMETRIC edges a step fixpoint forces equal
-                # labels across every edge, i.e. component-constant
-                # labels — and a component's constant label is the id
-                # of a member, which (labels only decrease from ids)
-                # must be the component minimum. Converged — the final
-                # round's pointer-jump join never runs (r8: this was
-                # previously detected one jump later, costing an extra
-                # self-join + checkpoint per clustering).
-                labels = stepped
-                converged = True
-                break
-            prev_sum = cur_sum
-            # pointer jump: cluster_id ← label(cluster_id). Labels are
-            # node ids, so the label table maps its own values; one
-            # extra self-join per round turns O(diameter) convergence
-            # into O(log diameter) — a 1M chain is ~20 rounds, not 1M.
-            # (A second same-plan jump was tried in r4 and REVERTED:
-            # composing the un-checkpointed jumped frame with itself
-            # trips Catalyst's self-join disambiguation — the outer
-            # join resolves against the inner alias, convergence
-            # stalls, and planning time grows ~5× per round. One jump
-            # between checkpoints is the stable form — LAZY since r13:
-            # localCheckpoint(eager=False) still swaps the plan for a
-            # concrete LogicalRDD immediately (the alias hygiene the
-            # eager form bought), but materialization folds into the
-            # NEXT round's convergence-sum job instead of paying its
-            # own eager job — ~0.25 s of pure job/stage protocol per
-            # round at gate scale (q100 trace), one fewer barrier per
-            # round at any scale. stepped is materialized above, so
-            # its double consumption here reads blocks; it stays
-            # alive (jump_input) until the jump RDD computes.
-            labels = (
-                stepped.alias("a")
-                .join(
-                    stepped.select(
-                        F.col(id_col).alias("_jid"),
-                        F.col("cluster_id").alias("_jlab"),
-                    ),
-                    F.col("a.cluster_id") == F.col("_jid"),
-                    "left",
-                )
-                .select(
-                    F.col(f"a.{id_col}").alias(id_col),
-                    F.least(
-                        F.col("a.cluster_id"),
-                        F.coalesce("_jlab", F.col("a.cluster_id")),
-                    ).alias("cluster_id"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            labels_store = labels
-            jump_input = stepped
-        if jump_input is not None:
-            # budget exhausted with a pending lazy jump: the loop exit
-            # paths below either raise or hand over to the star
-            # variant — the un-materialized jump and its input back
-            # nothing they need
-            release_frame(jump_input)
-        if not converged:
-            if algorithm == "minlabel":
-                # the raise abandons the final round's label table —
-                # free its checkpoint blocks or a catch-and-retry
-                # session leaks one label table per attempt
-                release_frame(labels_store)
-                raise RuntimeError(
-                    f"connected_components: no fixpoint after "
-                    f"{max_iterations} rounds — use algorithm='star' "
-                    "(large-star/small-star) for this graph"
-                )
-            # auto: the budget being exhausted is the signal that the
-            # topology wants the star variant — hand over wholesale
-            release_frame(labels_store)
-            return own(
-                _star_components(edges, nodes, id_col, max_iterations),
-                pairs,
-            )
+        # pairs rides along so a caller-supplied generator's own
+        # caches (e.g. a jaccard_pairs prefix persist) release with
+        # the result (the r5 generator-orphan convention)
+        return own(_star_components(edges, nodes, id_col), pairs)
     finally:
-        sess.conf.set("spark.sql.shuffle.partitions", _orig_parts)
+        # the star result is an eager checkpoint: nothing it returns
+        # reads the edge cache
         edges.unpersist()
-    # pairs rides along so a caller-supplied generator's own caches
-    # (e.g. a jaccard_pairs prefix persist) release with the result
-    # (the r5 generator-orphan convention)
-    return own(labels, labels, pairs)
 
 
 def _driver_components(
@@ -335,12 +149,12 @@ def _driver_components(
     table back onto the vertex set — isolated vertices keep their own
     id. Only edge ENDPOINTS ever reach the driver; the vertex set
     (corpus-sized at scale) stays distributed, so the output plan is
-    lazy and vertex-sized like the loop's.
+    lazy and vertex-sized.
 
     Exactness: labels are index positions into the SORTED unique
     endpoint array, so min over labels == min over ids; propagation
     is a monotone decreasing fixpoint — the same component-minimum
-    the distributed loop and the DuckDB recursive CTE compute.
+    large-star/small-star and the DuckDB recursive CTE compute.
     """
     import numpy as np
 
@@ -390,7 +204,6 @@ def _star_components(
     edges: DataFrame,
     nodes: DataFrame,
     id_col: str,
-    max_iterations: int,
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al. 2014).
 
@@ -410,9 +223,6 @@ def _star_components(
     which AQE splits). Fixpoint = the edge set is unchanged; the
     state is then a star per component rooted at its minimum.
     """
-    # star rounds double the iteration budget: each (large, small)
-    # pair is one logical round and convergence is O(log² n) worst
-    # case vs min-label's O(log d) typical
     # lazy checkpoints throughout: the count right after each one is
     # its materializing action — 1 job per round's state, not 2
     state = (
@@ -423,7 +233,7 @@ def _star_components(
     )
     prev_n = state.count()
     converged = False
-    for _ in range(max(2 * max_iterations, 8)):
+    for _ in range(_STAR_ROUNDS):
         # ---- large-star ----
         nbr = state.select("c", "p").unionAll(
             state.select(F.col("p").alias("c"), F.col("c").alias("p"))
@@ -497,10 +307,9 @@ def _star_components(
         if not split_edge.isEmpty():
             release_frame(out)
             raise RuntimeError(
-                "connected_components(star): no fixpoint after "
-                f"{max(2 * max_iterations, 8)} large/small-star rounds "
-                "and the partial labels under-merge — raise "
-                "max_iterations for this graph"
+                "connected_components: no fixpoint after "
+                f"{_STAR_ROUNDS} large/small-star rounds and the "
+                "partial labels under-merge"
             )
     return own(out, out)
 
@@ -513,8 +322,8 @@ def dedup_decisions(
 
     Shape: groupBy-aggregate + join back, NOT a window over
     ``cluster_id`` — a window packs every row of a cluster into ONE
-    task, so a giant dedup cluster (the exact topology the star
-    fallback exists for) serializes on a single core. The aggregate
+    task, so a giant dedup cluster (the topology large-star/small-star
+    keeps free of hot keys) serializes on a single core. The aggregate
     partial-combines map-side regardless of skew, the per-cluster
     stats table is tiny (one row per cluster), and AQE can split the
     skewed probe side of the join — none of which a window partition
@@ -883,7 +692,6 @@ def pagerank_fixed(
     *,
     iterations: int = 3,
     scale: int = 10**9,
-    checkpoint_every: int | None = None,
     driver_budget_bytes: int = DRIVER_BUDGET_BYTES,
 ) -> DataFrame:
     """Exact-integer PageRank over the symmetric closure of an
@@ -903,14 +711,6 @@ def pagerank_fixed(
     because the iteration count is a small constant — no driver loop
     state, one linear plan; Catalyst pipelines the joins. At 100 TB
     each step is the standard vertex-partitioned join.
-
-    ``checkpoint_every=k`` localCheckpoints the pr frame every k
-    steps (never the final one), bounding plan depth/analysis cost
-    for large ``iterations`` — the default linear unroll is right at
-    3, quadratic-planning pain starts around 10+. Checkpoint blocks
-    ride the result's ownership handles, so ``cache.release(result)``
-    frees them; as with every localCheckpoint, the released result is
-    dead afterwards (release only after materializing).
 
     ``driver_budget_bytes`` (0 disables): when the symmetric edge
     list (``_EDGE_ROW_BYTES`` per row) fits, the steps run on the
@@ -947,8 +747,7 @@ def pagerank_fixed(
         return own(out, sym, verts, pairs, vertices)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     pr = verts.select("id", F.lit(base).cast("long").alias("pr_e9"))
-    ckpts: list[DataFrame] = []
-    for step in range(1, iterations + 1):
+    for _ in range(iterations):
         contrib = (
             sym.join(pr.withColumnRenamed("id", "src"), "src")
             .join(deg, "src")
@@ -969,18 +768,4 @@ def pagerank_fixed(
                 ).cast("long").alias("pr_e9"),
             )
         )
-        if (
-            checkpoint_every
-            and step % checkpoint_every == 0
-            and step < iterations  # final frame stays a live plan
-        ):
-            pr = pr.localCheckpoint(eager=True)
-            if ckpts:
-                # the new checkpoint is fully materialized (eager), so
-                # the predecessor's blocks are unreachable — free them
-                # NOW instead of holding iterations/checkpoint_every
-                # vertex tables until release (the point of the knob
-                # is LARGE iteration counts)
-                release_frame(ckpts.pop())
-            ckpts.append(pr)
-    return own(pr, sym, verts, pairs, vertices, *ckpts)
+    return own(pr, sym, verts, pairs, vertices)

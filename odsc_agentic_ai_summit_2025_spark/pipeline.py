@@ -11,8 +11,8 @@ the partitioning, and the steps are one lazy program:
        │                                            ▲
        └────────▶ embeddings + FTS index ──▶ HybridRag.ask(question)
 
-``build_rag_pipeline`` wires it with optional guardrails, metering,
-and tracing; everything downstream (golden QA, judge metrics, usage
+``build_rag_pipeline`` wires it with the input guardrail on every
+extraction, optional metering, and tracing; everything downstream (golden QA, judge metrics, usage
 tables) consumes the returned handle. Each stage is also usable on
 its own — this module adds no logic, only the composition and the
 cache lifetimes: the extracted records are persisted per build (the
@@ -70,7 +70,6 @@ def build_rag_pipeline(
     client=None,
     client_factory=None,
     extracted: DataFrame | None = None,
-    guard_input: bool = True,
     meter: bool = True,
     top_k: int = 2,
 ) -> RagPipeline:
@@ -100,7 +99,7 @@ def build_rag_pipeline(
     """
     from .cache import own
     from .llm.client import MockLLMClient
-    from .llm.extract import extract_fhir, guarded_extract_fhir
+    from .llm.extract import guarded_extract_fhir
     from .llm.metering import SpanTracer, UsageCollector
     from .llm.rag import HybridRag
     from .operators.graph import build_graph
@@ -113,8 +112,9 @@ def build_rag_pipeline(
     owned: tuple = ()
     with tracer.span("extract"):
         if extracted is None:
-            runner = guarded_extract_fhir if guard_input else extract_fhir
-            extracted = runner(notes, client_factory=client_factory).persist()
+            extracted = guarded_extract_fhir(
+                notes, client_factory=client_factory
+            ).persist()
             # own(x, x): the frame is its own release handle, like
             # exact_unique in build_curation_pipeline
             owned = (own(extracted, extracted),)

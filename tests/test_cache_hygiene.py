@@ -101,9 +101,10 @@ def test_neardup_lsh_release(spark, sf_dir):
 
 
 def test_connected_components_releases_rounds(spark):
-    """The label-propagation loop must hold at most two rounds of
-    checkpoint blocks while running and exactly the final labels
-    after returning; release() drops those too."""
+    """The distributed path (large-star/small-star, budget 0) must
+    release each round's checkpoint and the edge persist, leaving
+    exactly the final labels after returning; release() drops those
+    too."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
@@ -111,7 +112,7 @@ def test_connected_components_releases_rounds(spark):
     chain = [(i, i + 1) for i in range(199)]
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
     baseline = _clean_baseline(spark)
-    comp = connected_components(pairs)
+    comp = connected_components(pairs, driver_budget_bytes=0)
     comp.count()
     leftover = _n_blocks(spark) - baseline
     assert leftover <= 1, f"loop left {leftover} round checkpoints behind"

@@ -29,8 +29,17 @@ def _union_find_components(n_nodes, edges):
     return {v: min(vs) for r, vs in comp.items() for v in vs}
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_connected_components_matches_union_find(spark, seed):
+@pytest.mark.parametrize(
+    "seed,budget",
+    [
+        pytest.param(seed, budget, id=f"{tag}{seed}")
+        for tag, budget in (("", None), ("budget0-", 0))
+        for seed in (0, 1, 2)
+    ],
+)
+def test_connected_components_matches_union_find(spark, seed, budget):
+    """Both paths against union-find: the driver solve (default
+    budget) and the distributed large-star/small-star (budget 0)."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
@@ -45,17 +54,18 @@ def test_connected_components_matches_union_find(spark, seed):
 
     pairs = spark.createDataFrame(edges, "a_id long, b_id long")
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    kw = {} if budget is None else {"driver_budget_bytes": budget}
     got = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(pairs, vertices=verts).collect()
+        for r in connected_components(pairs, vertices=verts, **kw).collect()
     }
     assert got == expected
 
 
 def test_connected_components_chain_converges(spark):
     """A path graph — worst-case diameter. 200 nodes would need 199
-    rounds under pure neighbor-min propagation (far beyond the
-    25-round cap); pointer jumping must close it in O(log n)."""
+    rounds under pure neighbor-min propagation; large-star/small-star
+    must close it well inside its round budget."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
         dedup_decisions,
@@ -64,9 +74,9 @@ def test_connected_components_chain_converges(spark):
     n = 200
     chain = [(i, i + 1) for i in range(n - 1)]
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
-    # driver_budget_bytes=0 forces the DISTRIBUTED loop (the driver
+    # driver_budget_bytes=0 forces the DISTRIBUTED path (the driver
     # fast path would otherwise absorb a graph this small) — this
-    # test exists to pin the pointer-jumping convergence bound
+    # test exists to pin its convergence on a long diameter
     comp = connected_components(pairs, driver_budget_bytes=0)
     rows = dedup_decisions(comp).collect()
     assert {r["cluster_id"] for r in rows} == {0}
@@ -78,7 +88,8 @@ def test_connected_components_chain_converges(spark):
 def test_driver_components_match_distributed_loop(spark, seed):
     """The r13 driver fast path (bounded edge list solved with numpy
     min-label + pointer jumping) must label every vertex identically
-    to the distributed fixpoint loop — including isolated vertices."""
+    to the distributed large-star/small-star — including isolated
+    vertices."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
@@ -105,35 +116,11 @@ def test_driver_components_match_distributed_loop(spark, seed):
     assert len(fast) == n
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_star_components_matches_union_find(spark, seed):
-    from odsc_agentic_ai_summit_2025_spark.operators.components import (
-        connected_components,
-    )
-
-    rng = random.Random(seed)
-    n = 120
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
-    edges = [(a, b) for a, b in edges if a != b]
-    expected = _union_find_components(n, edges)
-
-    pairs = spark.createDataFrame(edges, "a_id long, b_id long")
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(
-            pairs, vertices=verts, algorithm="star"
-        ).collect()
-    }
-    assert got == expected
-
-
 def test_star_components_giant_component_skew(spark):
-    """The topology min-label propagation is skew-hot on: ONE giant
-    component — a hub star fused with a long chain, so every node
-    funnels to label 0 (hot key) and the diameter stresses rounds.
-    The star variant must solve it, both directly and as the
-    ``auto`` fallback when the min-label budget is exhausted."""
+    """The topology a shared-label propagation is skew-hot on: ONE
+    giant component — a hub star fused with a long chain, so every
+    node funnels to label 0 (hot key) and the diameter stresses
+    rounds. The distributed path must solve it."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
@@ -142,25 +129,31 @@ def test_star_components_giant_component_skew(spark):
     chain = [(399 + i, 400 + i) for i in range(200)]  # chain off one leaf
     pairs = spark.createDataFrame(hub + chain, "a_id long, b_id long")
 
-    for algo in ("star", "auto"):
-        rows = connected_components(
-            pairs, algorithm=algo, max_iterations=3 if algo == "auto" else 25
-        ).collect()
-        assert {r["cluster_id"] for r in rows} == {0}, algo
-        assert len(rows) == 600, algo
+    rows = connected_components(pairs, driver_budget_bytes=0).collect()
+    assert {r["cluster_id"] for r in rows} == {0}
+    assert len(rows) == 600
 
 
-def test_minlabel_raises_without_fallback(spark):
+def test_distributed_components_shuffled_path(spark):
+    """A 200-node path whose ids are shuffled: label propagation that
+    relies on ids decreasing along the path needs ~diameter rounds
+    here. The distributed path must match union-find."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
 
-    chain = [(i, i + 1) for i in range(199)]
-    pairs = spark.createDataFrame(chain, "a_id long, b_id long")
-    with pytest.raises(RuntimeError, match="star"):
-        connected_components(
-            pairs, algorithm="minlabel", max_iterations=2
+    n = 200
+    ids = list(range(n))
+    random.Random(1).shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    pairs = spark.createDataFrame(edges, "a_id long, b_id long")
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in connected_components(
+            pairs, driver_budget_bytes=0
         ).collect()
+    }
+    assert got == _union_find_components(n, edges)
 
 
 def test_pii_trace_multi_rule(spark):
@@ -375,6 +368,23 @@ def test_driver_pagerank_match_distributed(spark, seed):
     assert len(fast) == n
 
 
+def _spy_budget_checks(monkeypatch) -> list:
+    """Record every driver-budget decision as ``(footprint, fits)``."""
+    from odsc_agentic_ai_summit_2025_spark import cache
+    from odsc_agentic_ai_summit_2025_spark.operators import components as C
+
+    checks = []
+    fits = cache.fits_driver_budget
+
+    def spy(footprint, budget):
+        checks.append((footprint, fits(footprint, budget)))
+        return checks[-1][1]
+
+    monkeypatch.setattr(cache, "fits_driver_budget", spy)
+    monkeypatch.setattr(C, "fits_driver_budget", spy)
+    return checks
+
+
 @pytest.mark.parametrize(
     "site", ["components", "triangles", "pagerank", "lsh"]
 )
@@ -428,15 +438,7 @@ def test_driver_budget_boundary(spark, monkeypatch, site):
         ),
     }[site]
 
-    checks = []
-    fits = cache.fits_driver_budget
-
-    def spy(footprint, budget):
-        checks.append((footprint, fits(footprint, budget)))
-        return checks[-1][1]
-
-    monkeypatch.setattr(cache, "fits_driver_budget", spy)
-    monkeypatch.setattr(C, "fits_driver_budget", spy)
+    checks = _spy_budget_checks(monkeypatch)
 
     def result(budget):
         checks.clear()
@@ -456,6 +458,37 @@ def test_driver_budget_boundary(spark, monkeypatch, site):
     if site == "triangles":
         assert len(below_checks) == 2 and below_checks[0][1]
     assert at == want and below == want and len(want) > 0
+
+
+@pytest.mark.parametrize(
+    "query", ["q66_dedup_clusters", "q100_curation_pipeline"]
+)
+def test_inventory_components_take_driver_path(
+    spark, sf_dir, monkeypatch, query
+):
+    """The dedup-tier inventory queries solve their components on the
+    driver at the test SF. The distributed reference gives the same
+    labels seconds slower per call, so a silent move over the budget
+    would show only as time; this pins the decision instead."""
+    from odsc_agentic_ai_summit_2025_spark.cache import release
+    from odsc_agentic_ai_summit_2025_spark.operators import components as C
+    from odsc_agentic_ai_summit_2025_spark.plans.registry import all_queries
+
+    checks = _spy_budget_checks(monkeypatch)
+    decisions = []
+    solve = C.connected_components
+
+    def recorded(*args, **kwargs):
+        checks.clear()
+        out = solve(*args, **kwargs)
+        decisions.append([ok for _, ok in checks])
+        return out
+
+    monkeypatch.setattr(C, "connected_components", recorded)
+    out = all_queries()[query].spark(spark, sf_dir)
+    out.count()
+    release(out)
+    assert decisions and all(d == [True] for d in decisions), decisions
 
 
 def test_pagerank_fixed_star_and_determinism(spark):
@@ -481,75 +514,27 @@ def test_pagerank_fixed_star_and_determinism(spark):
     assert got == again
 
 
-def test_pagerank_checkpoint_every_bounds_plan_and_matches(spark):
-    """iterations=12 with checkpoint_every=3 returns the exact same
-    fixed-point ranks as the pure unrolled plan, with analysis-plan
-    size bounded (lineage cut at the checkpoints) and all storage —
-    persists AND checkpoint blocks — freed by release."""
-    from odsc_agentic_ai_summit_2025_spark.cache import release
-    from odsc_agentic_ai_summit_2025_spark.operators.components import (
-        pagerank_fixed,
-    )
-
-    random.seed(91)
-    edges = list({(random.randrange(30), random.randrange(30)) for _ in range(60)})
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "a_id long, b_id long")
-    verts = spark.createDataFrame([(i,) for i in range(30)], "id long")
-
-    # driver_budget_bytes=0 forces the DISTRIBUTED unroll (the driver
-    # fast path would otherwise absorb a graph this small) — this test
-    # exists to pin the checkpoint machinery of the unrolled plan
-    plain = pagerank_fixed(
-        pairs, verts, iterations=12, driver_budget_bytes=0
-    )
-    want = {r["id"]: r["pr_e9"] for r in plain.collect()}
-    plain_depth = plain._jdf.queryExecution().analyzed().treeString().count("\n")
-    release(plain)
-
-    baseline = len(spark.sparkContext._jsc.getPersistentRDDs())
-    ck = pagerank_fixed(
-        pairs, verts, iterations=12, checkpoint_every=3, driver_budget_bytes=0
-    )
-    got = {r["id"]: r["pr_e9"] for r in ck.collect()}
-    ck_depth = ck._jdf.queryExecution().analyzed().treeString().count("\n")
-    assert got == want
-    # 12 unrolled joins vs a plan rooted at the step-9 checkpoint:
-    # the checkpointed analysis plan must be a small fraction
-    assert ck_depth < plain_depth / 3, (ck_depth, plain_depth)
-
-    # storage stays O(1) in iterations: intermediate checkpoints are
-    # freed as soon as their successor materializes, so only sym +
-    # verts + the LAST checkpoint hold blocks (not iterations/k frames)
-    before = dict(spark.sparkContext._jsc.getPersistentRDDs())
-    assert len(before) <= baseline + 3, (baseline, len(before))
-    release(ck)
-    after = dict(spark.sparkContext._jsc.getPersistentRDDs())
-    assert len(after) < len(before), "release freed nothing"
-    assert len(after) <= max(len(before) - 3, 0)
-
-
 # ---------------------------------------------------------------------------
 # Folded from test_review_r5d: components release/ownership
 # ---------------------------------------------------------------------------
 
 
-def test_components_release_on_minlabel_raise(spark):
-    from odsc_agentic_ai_summit_2025_spark.operators.components import (
-        connected_components,
-    )
+def test_components_raise_releases_storage(spark, monkeypatch):
+    """Out of rounds before the fixpoint, the distributed path raises
+    rather than return under-merged labels, and frees the edge
+    persist and every round's checkpoint on the way out."""
+    from odsc_agentic_ai_summit_2025_spark.operators import components as C
 
-    # a 12-node chain cannot converge in 1 round even with the jump
+    monkeypatch.setattr(C, "_STAR_ROUNDS", 1)
+    # a 13-node chain cannot converge in 1 large/small-star round
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["a_id", "b_id"]
     )
     jsc = spark.sparkContext._jsc
     base = jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            chain, algorithm="minlabel", max_iterations=1
-        ).count()
-    assert jsc.getPersistentRDDs().size() == base  # no leaked labels
+        C.connected_components(chain, driver_budget_bytes=0)
+    assert jsc.getPersistentRDDs().size() == base  # nothing leaked
 
 
 def test_components_propagate_generator_caches(spark):

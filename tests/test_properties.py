@@ -217,10 +217,10 @@ graph_strategy = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(edges=graph_strategy)
 def test_components_algorithms_agree(spark, edges):
-    """min-label propagation and large-star/small-star must compute
-    identical labelings on arbitrary graphs (self-loops, multi-edges,
-    disconnected nodes included) — the fallback cannot change
-    answers, only cost."""
+    """The driver solve and the distributed large-star/small-star
+    (budget 0) must compute identical labelings on arbitrary graphs
+    (self-loops, multi-edges, disconnected nodes included) — the
+    budget decision cannot change answers, only cost."""
     from odsc_agentic_ai_summit_2025_spark.operators.components import (
         connected_components,
     )
@@ -232,14 +232,12 @@ def test_components_algorithms_agree(spark, edges):
     verts = spark.createDataFrame([(i,) for i in range(26)], "id long")
     a = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(
-            pairs, vertices=verts, algorithm="minlabel"
-        ).collect()
+        for r in connected_components(pairs, vertices=verts).collect()
     }
     b = {
         r["id"]: r["cluster_id"]
         for r in connected_components(
-            pairs, vertices=verts, algorithm="star"
+            pairs, vertices=verts, driver_budget_bytes=0
         ).collect()
     }
     assert a == b
