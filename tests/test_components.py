@@ -519,10 +519,22 @@ def test_pagerank_fixed_star_and_determinism(spark):
 # ---------------------------------------------------------------------------
 
 
+def test_components_raise_on_exhausted_rounds(spark, monkeypatch):
+    """Out of rounds before the fixpoint, the distributed path raises,
+    naming its round budget, rather than return under-merged labels."""
+    from odsc_agentic_ai_summit_2025_spark.operators import components as C
+
+    monkeypatch.setattr(C, "_STAR_ROUNDS", 2)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="after 2 large/small-star"):
+        C.connected_components(chain, driver_budget_bytes=0).collect()
+
+
 def test_components_raise_releases_storage(spark, monkeypatch):
-    """Out of rounds before the fixpoint, the distributed path raises
-    rather than return under-merged labels, and frees the edge
-    persist and every round's checkpoint on the way out."""
+    """A raise on exhausted rounds frees the edge persist and every
+    round's checkpoint on the way out."""
     from odsc_agentic_ai_summit_2025_spark.operators import components as C
 
     monkeypatch.setattr(C, "_STAR_ROUNDS", 1)
