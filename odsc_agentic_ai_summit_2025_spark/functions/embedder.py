@@ -48,6 +48,13 @@ TOKEN_PATTERN = r"[a-z0-9]+"
 
 
 def tokens(col: Column) -> Column:
+    """Lowercase alnum-run tokens: the one token rule of the serving
+    path. The embedder, the FTS index (``fts.normalized_tokens``) and
+    the query terms (``fts.normalize_query_terms``, same
+    ``TOKEN_PATTERN``) all split by it, so 'Rosenbaum' in a note
+    matches 'rosenbaum' in a question; with a raw whitespace
+    tokenizer the BM25 branch silently missed every
+    capitalized/punctuated entity term."""
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
 
 
@@ -85,10 +92,9 @@ def embed(
     df = ensure_min_partitions(df, cost="gram")
 
     # JVM side stops at tokenization (codegen'd regexp): the rolling
-    # char hash moves into the Arrow kernel as a vectorized
-    # fixed-width fold (functions/text.py:char_poly_hash_np,
-    # value-identical to the char_poly_hash expression by property
-    # test). The expression form spent one interpreted Catalyst
+    # char hash moves into the Arrow kernel as a vectorized fold
+    # (functions/text.py:char_poly_hash_arrow, value-identical to the
+    # char_poly_hash expression by property test). The expression form spent one interpreted Catalyst
     # lambda step PER CHARACTER — 4.7 s of q63's 5.6 s at sf0.1
     # (r4 profile); the kernel form is one numpy pass per
     # max-token-length position over the whole batch.
@@ -103,8 +109,8 @@ def embed(
         # Arrow-native end to end (guide §4.2): the token-list column
         # flattens to ONE contiguous string buffer (+ lengths), the
         # rolling char hash folds straight over those bytes
-        # (char_poly_hash_arrow — value-identical to the pandas path's
-        # char_poly_hash_np by property test), and every OTHER input
+        # (char_poly_hash_arrow — value-identical to the
+        # char_poly_hash expression by property test), and every OTHER input
         # column passes through zero-copy instead of round-tripping
         # through pandas object cells (the text column is the widest
         # thing in the batch and was paying that toll for nothing).

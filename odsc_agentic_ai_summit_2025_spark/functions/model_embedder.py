@@ -38,6 +38,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..llm.http_client import RETRYABLE_STATUS
+
 DEFAULT_BASE_URL = "http://localhost:11434"  # ollama default port
 DEFAULT_MODEL = "nomic-embed-text"  # generate_note_embeddings.py:14
 
@@ -80,6 +82,10 @@ def _embed_call(
             if api_style == "openai":
                 return [d["embedding"] for d in out[key]]
             return out[key]
+        except urllib.error.HTTPError as e:
+            if e.code not in RETRYABLE_STATUS:
+                raise
+            last = e
         except (urllib.error.URLError, TimeoutError, OSError) as e:
             last = e
     raise RuntimeError(

@@ -87,18 +87,14 @@ def schema_xml(d: dict) -> str:
 
 def fhir_graph_schema_xml(graph) -> str:
     """Render the FhirGraph's catalog (operators/graph.py) the way
-    the reference prompts with it."""
+    the reference prompts with it: node and edge tables, and each
+    edge's endpoints, as ``operators.graph.EDGE_ENDPOINTS`` declares
+    them."""
+    from ..operators.graph import EDGE_ENDPOINTS, NODE_KEYS
+
     tables = graph.tables()
-    edge_endpoints = {
-        "lives_in": ("patient", "address"),
-        "treats": ("practitioner", "patient"),
-        "experiences": ("patient", "allergy"),
-        "causes": ("substance", "allergy"),
-        "has_immunization": ("patient", "immunization"),
-    }
-    nodes = {k: v for k, v in tables.items() if k not in edge_endpoints}
+    nodes = {k: tables[k] for k in NODE_KEYS}
     edges = {
-        k: (edge_endpoints[k][0], edge_endpoints[k][1], tables[k])
-        for k in edge_endpoints
+        k: (src, dst, tables[k]) for k, (src, dst) in EDGE_ENDPOINTS.items()
     }
     return schema_xml(schema_dict(nodes, edges))

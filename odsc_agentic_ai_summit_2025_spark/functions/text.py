@@ -78,48 +78,18 @@ def bpe_pieces(col: Column) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(BPE_SPLIT_RE), 0)
 
 
-def char_poly_hash_np(tokens, mod: int = HASH_MOD, mult: int = HASH_MULT):
-    """Vectorized numpy twin of :func:`char_poly_hash` for Arrow
-    kernels: 1-D array/sequence of ASCII token strings → int64 hash
-    array, identical value-for-value to the column expression
-    (property-tested).
-
-    The trick: a numpy unicode array is fixed-width UCS4, so viewing
-    it as uint32 IS the zero-padded (n_tokens, max_len) codepoint
-    matrix — the rolling fold then runs as max_len vectorized passes
-    over all tokens at once instead of one interpreted Catalyst
-    lambda step per character (the dominant cost of the expression
-    form on long documents, profiled r4: the q63 embed phase was
-    4.7 s of 5.6 s total). Tokens here are ``[a-z0-9]+`` (ASCII), so
-    codepoint == ``F.ascii`` for every character; padding codepoint 0
-    cannot occur in a token and cleanly marks end-of-string.
-    """
-    import numpy as np
-
-    u = np.asarray(tokens, dtype=str)
-    if u.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    width = u.dtype.itemsize // 4
-    codes = u.view(np.uint32).reshape(u.size, width).astype(np.int64)
-    h = np.zeros(u.size, dtype=np.int64)
-    for j in range(width):
-        c = codes[:, j]
-        live = c != 0
-        if not live.any():
-            break
-        h[live] = (h[live] * mult + c[live]) % mod
-    return h
-
-
 def char_poly_hash_arrow(arr, mod: int = HASH_MOD, mult: int = HASH_MULT):
-    """:func:`char_poly_hash_np` evaluated straight over a pyarrow
-    string array's byte buffers — tokens are ASCII (``[a-z0-9]+``), so
-    byte == codepoint and the rolling fold can gather from the single
-    contiguous data buffer per character position instead of first
-    materializing one Python/numpy unicode object per token
-    (guide §4.2: operations that only re-slice bytes should run on
-    the buffers). Value-identical to ``char_poly_hash_np``
-    (property-tested)."""
+    """Vectorized twin of :func:`char_poly_hash` for Arrow kernels:
+    pyarrow string array of ASCII tokens → int64 hash array,
+    identical value-for-value to the column expression
+    (property-tested, sliced arrays included).
+
+    Tokens are ``[a-z0-9]+`` (ASCII), so byte == codepoint
+    (``F.ascii``) and the rolling fold runs as one vectorized pass per
+    character position over the array's single contiguous data buffer,
+    instead of one interpreted Catalyst lambda step per character or
+    one Python/numpy unicode object per token (guide §4.2: operations
+    that only re-slice bytes should run on the buffers)."""
     import numpy as np
     import pyarrow as pa
 

@@ -40,32 +40,7 @@ def extract_fhir(
     nested inside the patient struct (the reference's ExtractAllergy
     exists but is not called — extract_fhir.baml:32).
     """
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory()
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for rid, note in zip(pdf["record_id"], pdf["note"]):
-                patient = client.extract_patient(note)
-                rows.append(
-                    {
-                        "record_id": int(rid),
-                        **patient,
-                        "immunization": client.extract_immunizations(note),
-                        "practitioner": client.extract_practitioner(note),
-                    }
-                )
-            yield pd.DataFrame(
-                {f.name: [r.get(f.name) for r in rows] for f in EXTRACTED_FHIR.fields}
-            )
-
-    from ..sources.io import ensure_min_partitions
-
-    return ensure_min_partitions(
-        notes.select("record_id", "note"), cost="heavy"
-    ).mapInPandas(run, EXTRACTED_FHIR)
+    return _extract(notes, client_factory, metered=False)
 
 
 #: usage columns appended by :func:`extract_fhir_with_usage`
@@ -90,54 +65,65 @@ def extract_fhir_with_usage(
     Token counts come from the client when it reports real usage,
     else the deterministic estimate (``metering.estimate_tokens``).
     """
+    return _extract(notes, client_factory, metered=True)
 
+
+def _extract(
+    notes: DataFrame,
+    client_factory: Callable[[], LLMClient],
+    metered: bool,
+) -> DataFrame:
+    """The one per-note extraction loop behind both entry points: a
+    ``mapInPandas`` making three client calls per note. ``metered``
+    wraps the client in a ``MeteredClient`` and appends the
+    :data:`USAGE_FIELDS` columns. Metering is imported only when it
+    is on: every task forks a fresh worker, which imports again
+    whatever the pickled closure names."""
     import pandas as pd
 
-    from ..schemas import EXTRACTED_FHIR
-    from .metering import UsageCollector, MeteredClient
+    out_schema = EXTRACTED_FHIR
+    if metered:
+        from .metering import MeteredClient, UsageCollector
 
-    out_schema = T.StructType(
-        list(EXTRACTED_FHIR.fields)
-        + list(T.StructType.fromDDL(USAGE_FIELDS).fields)
-    )
+        out_schema = T.StructType(
+            list(EXTRACTED_FHIR.fields)
+            + list(T.StructType.fromDDL(USAGE_FIELDS).fields)
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        collector = UsageCollector()
-        inner = client_factory()
-        # wire the shared collector INTO a client that reports real
-        # usage (HttpLLMClient exposes the attribute) — without this
-        # MeteredClient can never see real token counts and every row
-        # would fall back to the chars/4 estimate
-        if hasattr(inner, "collector"):
-            inner.collector = collector
-        client = MeteredClient(inner, collector)
+        client = client_factory()
+        if metered:
+            collector = UsageCollector()
+            # wire the shared collector INTO a client that reports real
+            # usage (HttpLLMClient exposes the attribute) — without this
+            # MeteredClient can never see real token counts and every
+            # row would fall back to the chars/4 estimate
+            if hasattr(client, "collector"):
+                client.collector = collector
+            client = MeteredClient(client, collector)
         for pdf in batches:
             rows: list[dict[str, Any]] = []
             for rid, note in zip(pdf["record_id"], pdf["note"]):
-                before = collector.n_records()
+                if metered:
+                    before = collector.n_records()
                 patient = client.extract_patient(note)
-                imm = client.extract_immunizations(note)
-                prac = client.extract_practitioner(note)
-                recs = collector.records_since(before)
-                rows.append(
-                    {
-                        "record_id": int(rid),
-                        **patient,
-                        "immunization": imm,
-                        "practitioner": prac,
-                        "n_llm_calls": len(recs),
-                        "prompt_tokens": sum(r.prompt_tokens for r in recs),
-                        "completion_tokens": sum(
-                            r.completion_tokens for r in recs
-                        ),
-                        "llm_ms": sum(r.duration_ms for r in recs),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    f.name: [r.get(f.name) for r in rows]
-                    for f in out_schema.fields
+                row = {
+                    "record_id": int(rid),
+                    **patient,
+                    "immunization": client.extract_immunizations(note),
+                    "practitioner": client.extract_practitioner(note),
                 }
+                if metered:
+                    recs = collector.records_since(before)
+                    row["n_llm_calls"] = len(recs)
+                    row["prompt_tokens"] = sum(r.prompt_tokens for r in recs)
+                    row["completion_tokens"] = sum(
+                        r.completion_tokens for r in recs
+                    )
+                    row["llm_ms"] = sum(r.duration_ms for r in recs)
+                rows.append(row)
+            yield pd.DataFrame(
+                {f.name: [r.get(f.name) for r in rows] for f in out_schema.fields}
             )
 
     from ..sources.io import ensure_min_partitions
@@ -149,14 +135,14 @@ def extract_fhir_with_usage(
 
 def usage_summary(extracted: DataFrame) -> DataFrame:
     """Fleet-wide usage totals + cost from the usage columns (cost
-    priced like the reference: $PROMPT_PRICE_PER_1K /
-    $COMPLETION_PRICE_PER_1K, baml_instrumentation.py:256-258)."""
-    import os
-
+    priced per call by ``metering.call_cost``: the same
+    $PROMPT_PRICE_PER_1K / $COMPLETION_PRICE_PER_1K table,
+    baml_instrumentation.py:256-258)."""
     from pyspark.sql import functions as F
 
-    pp = float(os.environ.get("PROMPT_PRICE_PER_1K", "0.0005"))
-    cp = float(os.environ.get("COMPLETION_PRICE_PER_1K", "0.000009"))
+    from .metering import prices_per_1k
+
+    pp, cp = prices_per_1k()
     return extracted.agg(
         F.count(F.lit(1)).alias("n_records"),
         F.sum("n_llm_calls").cast("bigint").alias("n_llm_calls"),

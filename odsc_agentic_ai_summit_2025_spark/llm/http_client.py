@@ -44,8 +44,10 @@ DEFAULT_MODEL = "openai/gpt-4o-mini"  # clients.baml:3-16
 API_KEY_ENV = "OPENROUTER_API_KEY"  # clients.baml:8
 
 # retry policy: the reference's BAML clients retry transient failures
-# with exponential backoff; same statuses here
-_RETRYABLE_STATUS = {408, 409, 429, 500, 502, 503, 504}
+# with exponential backoff; same statuses here. Any other HTTP status
+# (400, 401, 404, ...) fails the same way on every attempt, so it
+# raises at once — the model embedder follows the same rule.
+RETRYABLE_STATUS = {408, 409, 429, 500, 502, 503, 504}
 
 # Transport: (url, headers, payload-bytes, timeout_s) -> response dict.
 Transport = Callable[[str, dict[str, str], bytes, float], dict[str, Any]]
@@ -141,7 +143,7 @@ class HttpLLMClient:
                     )
                 return body["choices"][0]["message"]["content"]
             except urllib.error.HTTPError as e:
-                if e.code not in _RETRYABLE_STATUS:
+                if e.code not in RETRYABLE_STATUS:
                     raise
                 last_err = e
             except (

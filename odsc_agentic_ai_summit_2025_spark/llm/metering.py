@@ -39,12 +39,20 @@ _PROMPT_PRICE_DEFAULT = 0.0005
 _COMPLETION_PRICE_DEFAULT = 0.000009
 
 
-def call_cost(prompt_tokens: int, completion_tokens: int) -> float:
-    """Dollar cost of one call (env-priced, reference defaults)."""
-    pp = float(os.environ.get(_PROMPT_PRICE_ENV, _PROMPT_PRICE_DEFAULT))
-    cp = float(
-        os.environ.get(_COMPLETION_PRICE_ENV, _COMPLETION_PRICE_DEFAULT)
+def prices_per_1k() -> tuple[float, float]:
+    """(prompt, completion) dollars per 1k tokens: env-priced,
+    reference defaults. The one price table of the LLM surface."""
+    return (
+        float(os.environ.get(_PROMPT_PRICE_ENV, _PROMPT_PRICE_DEFAULT)),
+        float(
+            os.environ.get(_COMPLETION_PRICE_ENV, _COMPLETION_PRICE_DEFAULT)
+        ),
     )
+
+
+def call_cost(prompt_tokens: int, completion_tokens: int) -> float:
+    """Dollar cost of one call (priced by :func:`prices_per_1k`)."""
+    pp, cp = prices_per_1k()
     return (prompt_tokens / 1000.0) * pp + (completion_tokens / 1000.0) * cp
 
 

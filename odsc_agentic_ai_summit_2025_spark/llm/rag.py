@@ -7,13 +7,19 @@ Driver-side orchestration around Spark-built artifacts:
 2. schema introspection → XML                           utils.py:37-105
 3. LLM schema pruning                                   rag.py:29-39
 4. LLM entity-keyword extraction                        rag.py:114-127
-5a. graph branch: text2sql → spark.sql over the views   rag.py:48-75
+5a. graph branch: text2sql → spark.sql → collect → answer  rag.py:48-75
 5b. vector branch: hybrid FTS+vector search, RRF top-k  rag.py:83-96
 6. synthesis (graph wins on counts)                     rag.py:147-150
 7. output guardrail                                     rag_obs_eval.py:357-379
 
 Steps 2-4/6 are one LLM round-trip each (driver-side, injectable
-client); 5a/5b are Spark jobs. The reference runs 5a/5b as concurrent
+client); 5a/5b are Spark jobs. The graph branch is one path: the
+generated SQL runs as written over the 11 registered graph views (the
+only tables the prompt schema names), and SQL that fails to run leaves
+the graph answer empty (the reference's Q10 failure mode) while the
+vector branch still answers. Variable-length ``*1..4`` patterns
+belong to hand-written queries over ``operators.graph``, as in the
+reference. The reference runs 5a/5b as concurrent
 asyncio tasks; here the two Spark actions run one after the other.
 Both branches read only precomputed artifacts, so the result is the
 same, but an ask pays the sum of the two branch latencies rather
@@ -22,7 +28,6 @@ than the larger of them.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,11 +35,10 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions import guardrails
-from ..functions.embedder import embed, DEFAULT_DIM
+from ..functions.embedder import embed
 from ..functions.schema_xml import fhir_graph_schema_xml
 from ..operators import fts, rrf
 from ..operators import similarity as sim
-from ..operators.graph import FrontierExplosionError, variable_length_paths
 from .client import LLMClient, MockLLMClient
 
 
@@ -54,8 +58,10 @@ class HybridRagAnswer:
 
 
 class HybridRag:
-    """Holds the precomputed artifacts (graph views + note/vector
-    tables) and answers questions through the 7-step path."""
+    """Holds the precomputed artifacts (the graph views, the note
+    vectors and the FTS index) and answers questions through the
+    7-step path; the graph branch runs the generated SQL over the
+    views and nothing else."""
 
     def __init__(
         self,
@@ -64,22 +70,12 @@ class HybridRag:
         notes: DataFrame,
         client: LLMClient | None = None,
         top_k: int = 2,  # reference default, rag.py:80
-        dim: int = DEFAULT_DIM,
         collector=None,  # metering.UsageCollector → per-call metrics
         tracer=None,  # metering.SpanTracer → per-step spans
-        trail_guard_factor: int = 100,  # max_frontier_rows = factor × |E|
     ) -> None:
         self.spark = spark
-        self.graph = graph
         self.client = client or MockLLMClient()
         self.guardrail_traces: list = []
-        #: FrontierExplosionError messages from refused star patterns
-        self.graph_refusals: list[str] = []
-        self.trail_guard_factor = trail_guard_factor
-        # name -> (trails frame, max_hops it was expanded to): the
-        # memo is valid only for the SAME hop depth — a caller asking
-        # for a different max_hops must not be served the stale view
-        self._trail_views: dict[str, tuple[DataFrame, int]] = {}
         if collector is not None:
             from .metering import MeteredClient
 
@@ -91,12 +87,11 @@ class HybridRag:
             tracer = SpanTracer()
         self.tracer = tracer
         self.top_k = top_k
-        self.dim = dim
         self.schema_xml = fhir_graph_schema_xml(graph)
         graph.register(spark)
         # S8: embed-on-insert as an explicit column op; cache both
         # retrieval artifacts — they serve every question.
-        self.notes = embed(notes, "note", "vector", dim).cache()
+        self.notes = embed(notes, "note").cache()
         # FTS index built ONCE (generate_note_embeddings.py:49); every
         # ask() only scores its own query-term slice. Index and query
         # share ONE normalization (lowercase alnum runs) — a raw
@@ -109,61 +104,11 @@ class HybridRag:
         )
 
     def release(self) -> None:
-        """Release every serving cache this instance pinned: trail
-        views, FTS index and note vectors. Idempotent; a later ask
-        recomputes what it reads."""
-        for trails, _ in self._trail_views.values():
-            cache.release(trails)
-        self._trail_views.clear()
+        """Release every serving cache this instance pinned: the FTS
+        index and the note vectors. Idempotent; a later ask recomputes
+        what it reads."""
         self.fts_index.release()
         cache.release_frame(self.notes)
-
-    # -- graph star patterns (Cypher `-[*1..4]-`, rag.py graph branch) -----
-    def _materialize_trail_views(self, sql: str, max_hops: int = 4) -> None:
-        """The text2sql surface for Cypher variable-length patterns:
-        generated SQL may reference ``<edge_table>_trails`` views
-        (columns start, end, hops — the reference executes ``*1..N``
-        natively in Kuzu, src/rag.py:56). Each referenced view is
-        materialized on demand via ``variable_length_paths`` with the
-        hub guard ON — ``max_frontier_rows`` defaults to 100× the
-        edge count — so a generated star pattern aimed at a
-        power-law/hub-heavy graph refuses in seconds with
-        :class:`FrontierExplosionError` (recorded in
-        ``graph_refusals`` by ``ask``) instead of launching an
-        effectively unbounded trail-expansion job.
-
-        Views are memoized per edge table: the graph is immutable per
-        :class:`HybridRag` instance, so the first question that
-        mentions a trails view pays the guarded expansion (plus the
-        eager edge count) and every later one reuses it. Nothing is
-        released or re-registered until a NEW frame exists, so a
-        guard refusal mid-build leaves no stale view behind."""
-        tables = self.graph.tables()
-        for name in sorted({
-            m.group(1)
-            for m in re.finditer(r"\b(\w+)_trails\b", sql)
-        }):
-            memo = self._trail_views.get(name)
-            if memo is not None and memo[1] == max_hops:
-                continue
-            edges = tables.get(name)
-            if edges is None or not {"src", "dst"} <= set(edges.columns):
-                continue
-            n_edges = edges.count()
-            trails = variable_length_paths(
-                edges, "src", "dst", 1, max_hops,
-                undirected=True,
-                max_frontier_rows=max(
-                    1_000, self.trail_guard_factor * n_edges
-                ),
-            )
-            # replace-only-after-success: the new frame exists before
-            # the old one is released or the view re-registered, so a
-            # guard refusal above leaves the prior state intact
-            trails.createOrReplaceTempView(f"{name}_trails")
-            if memo is not None:
-                cache.release(memo[0])
-            self._trail_views[name] = (trails, max_hops)
 
     # -- vector branch (rag.py:83-96) --------------------------------------
     def _vector_context(self, entities: list[dict[str, str]]) -> DataFrame:
@@ -179,8 +124,6 @@ class HybridRag:
                 F.col("id").alias("qid"), F.lit(query_text).alias("q")
             ),
             "q",
-            "vector",
-            self.dim,
         )
         vec = sim.knn_bruteforce(
             self.notes, qdf, "vector", "record_id", "qid", k=20,
@@ -217,27 +160,18 @@ class HybridRag:
                 sql = self.client.text2sql(q, pruned, entities)
                 graph_rows: list[tuple] = []
                 graph_answer = ""
-                sql_ok = True
                 try:
-                    self._materialize_trail_views(sql)
                     graph_rows = [
                         tuple(r) for r in self.spark.sql(sql).collect()
                     ]
-                except FrontierExplosionError as e:
-                    # hub-guard refusal: the generated star pattern
-                    # would explode on this graph — fail fast with
-                    # the clear message, keep serving the vector
-                    # branch (graph side degrades like bad SQL)
-                    self.graph_refusals.append(str(e))
-                    sql_ok = False
                 except Exception:
                     # bad generated SQL ≡ reference's Q10 failure mode.
                     # ONLY the SQL execution is guarded: a client
                     # failure in answer() below is a transport error
                     # that must surface, not be misclassified as bad
                     # SQL and silently discard correct graph rows.
-                    sql_ok = False
-                if sql_ok:
+                    pass
+                else:
                     graph_answer = self.client.answer(
                         q,
                         "; ".join(

@@ -25,6 +25,10 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.embedder import TOKEN_PATTERN
+# the serving index tokenizer IS the embedder's token rule, so index,
+# query terms and note vectors split text one way
+from ..functions.embedder import tokens as normalized_tokens  # noqa: F401
 from ..functions.text import tokens
 
 K1 = 1.2
@@ -33,27 +37,10 @@ B = 0.75
 Tokenizer = Callable[[Column], Column]
 
 
-def normalized_tokens(col: Column) -> Column:
-    """Lowercase alnum-run tokenizer — the normalization-shared
-    variant for serving paths (HybridRag applies the same rule to
-    query terms, so 'Rosenbaum' in a note matches 'rosenbaum' in a
-    question; with the raw whitespace tokenizer the BM25 branch
-    silently missed every capitalized/punctuated entity term).
-    ONE pattern source (``embedder.TOKEN_PATTERN``) for index build,
-    query normalization, and the embedding tokenizer — the
-    index/query mismatch this docstring warns about would otherwise
-    be three regex literals apart."""
-    from ..functions.embedder import TOKEN_PATTERN
-
-    return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
-
-
 def normalize_query_terms(text: str) -> list[str]:
     """Driver-side twin of :func:`normalized_tokens` for query
     strings — one shared rule for index build and query."""
     import re
-
-    from ..functions.embedder import TOKEN_PATTERN
 
     return re.findall(TOKEN_PATTERN, text.lower())
 

@@ -177,10 +177,18 @@ def build_graph(extracted: DataFrame) -> FhirGraph:
     )
 
 
-_EDGE_TABLES = (
-    "lives_in", "treats", "experiences", "causes", "has_immunization"
-)
-_NODE_KEYS = {
+#: The graph catalog, declared once: each of the 5 edge tables with
+#: its (from, to) node tables, and each of the 6 node tables with its
+#: key. ``write_graph`` buckets by it, ``read_graph`` loads by it and
+#: the prompt schema (``functions.schema_xml``) renders it.
+EDGE_ENDPOINTS = {
+    "lives_in": ("patient", "address"),
+    "treats": ("practitioner", "patient"),
+    "experiences": ("patient", "allergy"),
+    "causes": ("substance", "allergy"),
+    "has_immunization": ("patient", "immunization"),
+}
+NODE_KEYS = {
     "patient": "patient_id",
     "address": "id",
     "practitioner": "id",
@@ -208,7 +216,7 @@ def write_graph(
     spark = graph.patient.sparkSession
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for name, df in graph.tables().items():
-        key = "src" if name in _EDGE_TABLES else _NODE_KEYS[name]
+        key = "src" if name in EDGE_ENDPOINTS else NODE_KEYS[name]
         (
             df.write.mode("overwrite")
             .bucketBy(n_buckets, key)
@@ -225,7 +233,7 @@ def read_graph(
     the catalog, so joins on the bucket keys skip the shuffle)."""
     return {
         name: spark.table(f"{database}.{name}")
-        for name in (*_NODE_KEYS, *_EDGE_TABLES)
+        for name in (*NODE_KEYS, *EDGE_ENDPOINTS)
     }
 
 

@@ -44,6 +44,7 @@ class Query:
 _CHANGED = (
     "q63_neardup_lsh",
     "q66_dedup_clusters",
+    "q68_extract_usage",
     "q78_simhash_pairs",
     "q82_semantic_dedup",
     "q89_editdist_pairs",

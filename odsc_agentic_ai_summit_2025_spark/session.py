@@ -13,26 +13,41 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: driver heap ceiling, whatever the host has
+_MAX_HEAP_MB = 48 * 1024
+
+
+def host_defaults(affinity: set[int], mem_bytes: int) -> tuple[int, str]:
+    """Local cores and driver heap sized from the host: every core this
+    process may run on, and a quarter of physical memory (at least 1g,
+    at most 48g). A fixed ``local[32]`` with a 48g heap ran 36 tasks at
+    once on a 4-core, 15 GB host until the kernel killed the JVM."""
+    heap_mb = min(_MAX_HEAP_MB, max(1024, mem_bytes // 4 // 2**20))
+    return len(affinity), f"{heap_mb}m"
+
+
 def get_spark(
     app_name: str = "odsc_spark_engine",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
-    On a real cluster, ``master``/memory come from spark-submit; local
-    runs default to ``local[$SPARK_GRAFT_CPUS]``.
+    Runs on ``local[N]`` with the :func:`host_defaults` cores and heap;
+    ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM`` override them
+    for a deployment.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cpus}]"
+    cores, heap = host_defaults(
+        os.sched_getaffinity(0),
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"),
+    )
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", cores))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -95,7 +110,7 @@ def get_spark(
     builder = (
         builder
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -12,8 +12,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 def spark():
     from odsc_agentic_ai_summit_2025_spark.session import get_spark
 
-    # Small-memory session for tests; shuffle partitions low for speed.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
+    # host-sized session; shuffle partitions low for speed
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 

@@ -92,3 +92,15 @@ def test_fanout_cost_is_a_declared_class():
             ):
                 bad.append(f"{path.name}:{node.lineno}")
     assert calls and not bad, bad
+
+
+def test_session_defaults_follow_the_host():
+    """The session's cores are the CPUs this process may run on and
+    its driver heap a quarter of physical memory, at least 1g and at
+    most 48g. A pure function of the host: no JVM starts."""
+    from odsc_agentic_ai_summit_2025_spark.session import host_defaults
+
+    gib = 2**30
+    assert host_defaults({0, 1, 2, 3}, 16 * gib) == (4, "4096m")
+    assert host_defaults({5}, 2 * gib) == (1, "1024m")
+    assert host_defaults(set(range(64)), 512 * gib) == (64, "49152m")

@@ -195,70 +195,6 @@ def test_hybrid_rag_golden_path(spark, notes_df, gold_df):
 
 
 @needs_ref
-def test_hybrid_rag_trail_views_and_hub_guard(spark, notes_df, gold_df):
-    """r9: the Cypher `*1..N` surface is reachable from the RAG graph
-    branch — generated SQL referencing `<edge>_trails` materializes
-    the guarded variable-length-path view on demand, and a guard trip
-    refuses fast (recorded in graph_refusals) while the pipeline
-    keeps serving the vector branch. Golden QA SQL never references a
-    _trails view, so that suite is untouched by this surface."""
-    from odsc_agentic_ai_summit_2025_spark.llm.client import MockLLMClient
-    from odsc_agentic_ai_summit_2025_spark.llm.rag import HybridRag
-    from odsc_agentic_ai_summit_2025_spark.operators.graph import build_graph
-
-    class TrailClient(MockLLMClient):
-        def text2sql(self, question, schema_xml, entities):
-            return "SELECT COUNT(*) AS n FROM treats_trails WHERE hops = 1"
-
-    rag = HybridRag(spark, build_graph(gold_df), notes_df, client=TrailClient())
-    # success path: view materializes under the default 100×|E| guard
-    # and the generated SQL runs against it
-    rag._materialize_trail_views("... treats_trails ...", max_hops=1)
-    n = spark.sql(
-        "SELECT COUNT(*) AS n FROM treats_trails WHERE hops = 1"
-    ).collect()[0]["n"]
-    n_edges = rag.graph.tables()["treats"].count()
-    assert n == 2 * n_edges or n > 0  # symmetrized hop-1 trails
-    # memoization (r10): the graph is immutable per instance, so a
-    # second question referencing the same view at the same hop depth
-    # must NOT redo the guarded expansion — same frame handle, even
-    # with the guard cranked to zero (a rebuild would refuse). A
-    # DIFFERENT max_hops is not served from the memo (r10 review):
-    # with the guard at zero the hop-2 rebuild must refuse rather
-    # than silently reuse the hop-1 view.
-    first_frame, first_hops = rag._trail_views["treats"]
-    assert first_hops == 1
-    rag.trail_guard_factor = 0
-    rag._materialize_trail_views("... treats_trails ...", max_hops=1)
-    assert rag._trail_views["treats"][0] is first_frame
-    import pytest as _pytest
-
-    from odsc_agentic_ai_summit_2025_spark.operators.graph import (
-        FrontierExplosionError,
-    )
-
-    with _pytest.raises(FrontierExplosionError):
-        rag._materialize_trail_views("... treats_trails ...", max_hops=2)
-    # failed rebuild leaves the prior memo and view intact
-    assert rag._trail_views["treats"][0] is first_frame
-    # refusal path: fresh instance (no memoized view) with the guard
-    # below even the hop-1 frontier — ask() must return (no unbounded
-    # job), record the clear error, and still produce a vector-side
-    # answer; no stale temp view may be left registered by the
-    # refused build
-    rag2 = HybridRag(
-        spark, build_graph(gold_df), notes_df, client=TrailClient()
-    )
-    rag2.trail_guard_factor = 0
-    ans = rag2.ask("How many patients connect to Arla Fritsch in 4 hops?")
-    assert rag2.graph_refusals, "guard trip not recorded"
-    assert "max_frontier_rows" in rag2.graph_refusals[-1]
-    assert ans.graph_rows == [] and ans.graph_answer == ""
-    assert isinstance(ans.final_answer, str)
-    assert "treats" not in rag2._trail_views
-
-
-@needs_ref
 def test_hybrid_rag_guardrail_masks_question(spark, notes_df, gold_df):
     from odsc_agentic_ai_summit_2025_spark.llm.rag import HybridRag
     from odsc_agentic_ai_summit_2025_spark.operators.graph import build_graph

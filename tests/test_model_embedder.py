@@ -146,3 +146,25 @@ def test_embed_with_model_retries_then_fails(spark):
     )
     with pytest.raises(Exception, match="after 2 attempts"):
         out.collect()
+
+
+@pytest.mark.parametrize("status,attempts", [(400, 1), (503, 3)])
+def test_embed_call_retries_only_transient_status(status, attempts):
+    """A client error (HTTP 400) fails the same way on every attempt,
+    so it raises after one; a transient one (503) is retried up to
+    ``max_retries`` times, the rule the LLM client follows."""
+    import urllib.error
+
+    from odsc_agentic_ai_summit_2025_spark.functions.model_embedder import (
+        _embed_call,
+    )
+
+    calls = []
+
+    def transport(url, payload, timeout_s):
+        calls.append(url)
+        raise urllib.error.HTTPError(url, status, "refused", None, None)
+
+    with pytest.raises(Exception):
+        _embed_call(["x"], "m", "http://model", "ollama", transport, 1.0, 2)
+    assert len(calls) == attempts

@@ -127,51 +127,30 @@ token_strategy = st.lists(
 
 @settings(**SETTINGS)
 @given(toks=token_strategy)
-def test_char_poly_hash_np_matches_expression(spark, toks):
-    """The vectorized Arrow-kernel hash (UCS4-view fold) must equal
-    the Catalyst expression fold value-for-value — this is what lets
-    the embedder hash tokens kernel-side without changing any
-    oracle."""
+def test_char_poly_hash_arrow_matches_expression(spark, toks):
+    """The Arrow-buffer fold the embedder runs (byte gather over the
+    string column's contiguous data buffer) must equal the Catalyst
+    expression fold, the reference semantics, value-for-value — on
+    the whole array and on a slice, whose non-zero offset the buffer
+    math must honor."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from odsc_agentic_ai_summit_2025_spark.functions.text import (
         char_poly_hash,
-        char_poly_hash_np,
+        char_poly_hash_arrow,
     )
 
-    got = list(char_poly_hash_np(toks)) if toks else []
-    df = spark.createDataFrame([(t,) for t in toks], "tok string")
+    df = spark.createDataFrame(list(enumerate(toks)), "i int, tok string")
     want = [
         r["h"] for r in
-        df.select("tok", char_poly_hash(F.col("tok")).alias("h"))
-        .orderBy("tok").collect()
+        df.select("i", char_poly_hash(F.col("tok")).alias("h"))
+        .orderBy("i").collect()
     ]
-    got_sorted = [h for _, h in sorted(zip(toks, got))]
-    assert got_sorted == want
-
-
-@settings(**SETTINGS)
-@given(toks=token_strategy)
-def test_char_poly_hash_arrow_matches_np(toks):
-    """The Arrow-buffer fold (byte gather over the string column's
-    contiguous data buffer) must equal the UCS4-view fold
-    value-for-value — this is what lets the embedder hash tokens
-    straight off the flattened token-list column (r13)."""
-    import pyarrow as pa
-
-    from odsc_agentic_ai_summit_2025_spark.functions.text import (
-        char_poly_hash_arrow,
-        char_poly_hash_np,
-    )
-
     arr = pa.array(toks, type=pa.string())
-    assert list(char_poly_hash_arrow(arr)) == list(char_poly_hash_np(toks))
-    # sliced arrays carry a non-zero offset — the buffer math must
-    # honor it
+    assert list(char_poly_hash_arrow(arr)) == want
     if len(toks) > 1:
-        assert list(char_poly_hash_arrow(arr.slice(1))) == list(
-            char_poly_hash_np(toks[1:])
-        )
+        assert list(char_poly_hash_arrow(arr.slice(1))) == want[1:]
 
 
 @settings(**SETTINGS)
