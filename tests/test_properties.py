@@ -125,32 +125,55 @@ token_strategy = st.lists(
 )
 
 
-@settings(**SETTINGS)
-@given(toks=token_strategy)
-def test_char_poly_hash_arrow_matches_expression(spark, toks):
-    """The Arrow-buffer fold the embedder runs (byte gather over the
-    string column's contiguous data buffer) must equal the Catalyst
-    expression fold, the reference semantics, value-for-value — on
-    the whole array and on a slice, whose non-zero offset the buffer
-    math must honor."""
-    import pyarrow as pa
+def _expression_hashes(spark, toks):
+    """The Catalyst expression fold, the reference semantics, in token
+    order."""
     from pyspark.sql import functions as F
 
     from odsc_agentic_ai_summit_2025_spark.functions.text import (
         char_poly_hash,
-        char_poly_hash_arrow,
     )
 
     df = spark.createDataFrame(list(enumerate(toks)), "i int, tok string")
-    want = [
+    return [
         r["h"] for r in
         df.select("i", char_poly_hash(F.col("tok")).alias("h"))
         .orderBy("i").collect()
     ]
+
+
+@settings(**SETTINGS)
+@given(toks=token_strategy)
+def test_char_poly_hash_arrow_matches_expression(spark, toks):
+    """The Arrow-buffer fold the embedder runs (byte gather over the
+    string column's contiguous data buffer) must equal the expression
+    fold value-for-value."""
+    import pyarrow as pa
+
+    from odsc_agentic_ai_summit_2025_spark.functions.text import (
+        char_poly_hash_arrow,
+    )
+
     arr = pa.array(toks, type=pa.string())
-    assert list(char_poly_hash_arrow(arr)) == want
-    if len(toks) > 1:
-        assert list(char_poly_hash_arrow(arr.slice(1))) == want[1:]
+    assert list(char_poly_hash_arrow(arr)) == _expression_hashes(spark, toks)
+
+
+@settings(**SETTINGS)
+@given(toks=token_strategy.filter(lambda t: len(t) > 1))
+def test_char_poly_hash_arrow_slice_matches_expression(spark, toks):
+    """A sliced Arrow array carries a non-zero offset into the data
+    buffer; the fold must honor it and still equal the expression fold
+    on the sliced tokens."""
+    import pyarrow as pa
+
+    from odsc_agentic_ai_summit_2025_spark.functions.text import (
+        char_poly_hash_arrow,
+    )
+
+    arr = pa.array(toks, type=pa.string()).slice(1)
+    assert list(char_poly_hash_arrow(arr)) == _expression_hashes(
+        spark, toks[1:]
+    )
 
 
 @settings(**SETTINGS)
