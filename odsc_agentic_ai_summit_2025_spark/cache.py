@@ -9,14 +9,23 @@ long-lived session composing operators (exactly what
 ``build_curation_pipeline`` does) accumulates executor-memory
 residue run over run.
 
-Convention (round-4, closes the r3 verdict item):
+The rule: a frame frees exactly the caches it carries.
 
 - an operator that caches an intermediate calls
-  ``own(result, intermediate, ...)`` before returning;
+  ``own(result, intermediate, ...)`` before returning; a backing
+  frame's own handles are inherited, so ownership composes;
 - whoever materializes the result calls ``release(result)`` after
-  the consuming action (composition layers do this per stage; tests
-  assert ``sparkContext._jsc.getPersistentRDDs()`` returns to
-  baseline).
+  the consuming action, and ``release`` frees ``handles(result)``
+  and nothing else (a second call is a no-op).
+
+Ownership is a plain Python attribute on the DataFrame wrapper, so
+any ``.select``/``.filter``/``.limit`` yields a frame that owns
+nothing: releasing a preview or a derived view can never yank a
+live base's caches. Code that reshapes an owning result before
+handing it on re-owns it at its return — ``own(x.select(...), x)``.
+``tests/test_inventory.py`` holds every registered query to this:
+after ``release(result)`` the persistent-RDD census is back at its
+pre-query value.
 
 ``release`` handles both cache kinds:
 
@@ -27,28 +36,10 @@ Convention (round-4, closes the r3 verdict item):
   them (verified empirically), so the RDD is unpersisted directly
   via the logical plan.
 
-Ownership is carried as a plain Python attribute on the DataFrame
-wrapper, so the fast path survives only as far as the operator-return
-boundary (any ``.select`` produces a fresh wrapper) — which is
-exactly the boundary where composition layers hold the reference.
-Because one future refactor inserting a ``.select`` between operator
-and release would silently leak, ``own`` ALSO records
-``(result plan, handles)`` in a module-level registry, and
-``release`` falls back to matching the released frame's analyzed
-plan against registered RESULT plans — walking down only through
-TRANSPARENT single-child wrapper nodes (Project/SubqueryAlias),
-i.e. exactly the ``.select``/``.alias``-between-return-and-release
-shapes the fallback exists for. A ``.filter()``/``.sort()``/
-``.limit()`` view deliberately does NOT match: those are routinely
-built as previews of a result the caller still holds, and releasing
-a preview must never yank the live base's caches — release the base
-frame itself. A frame merely *derived*
-from an owned result (an aggregate, a join) does not match, so
-releasing it cannot yank a cache another live frame still needs —
-``release`` on a frame that owns nothing stays a no-op. Registry
-entries are pruned whenever none of their handles still hold
-storage, so caches released by any other path (``clearCache``,
-direct ``unpersist``) cannot linger as stale match targets.
+A non-DataFrame handle (a Broadcast riding a result) is unpersisted
+the same way; ``own`` also lists it so ``sweep_blocks`` — which sees
+only block-manager RDDs — can drop its executor copies for callers
+that sweep instead of releasing.
 
 Generator-orphan convention (r5) — and its multi-consumer hazard:
 operators that consume a caller-supplied frame which may itself be a
@@ -72,32 +63,9 @@ from pyspark.sql import DataFrame
 
 _ATTR = "_spark_graft_owned_caches"
 
-# Marker set on a NON-DataFrame handle (e.g. a Broadcast riding a
-# result as its release handle) once release_frame has unpersisted
-# it. Such handles expose no storage census API, so _is_live treats
-# them as live until this marker appears — without it, _prune would
-# drop the registry entry immediately and the wrapper-loss fallback
-# could never free the broadcast (r6 ADVICE, cache.py:194).
-_RELEASED_ATTR = "_spark_graft_handle_released"
-
-# (analyzed result plan, handles) for every own() call whose handles
-# may still hold storage — the wrapper-loss fallback's search space.
-# Bounded: _prune() drops entries with no live handle on every
-# own()/release().
-_REGISTRY: list[tuple[object, list[DataFrame]]] = []
-
-# Wrapper nodes release() may walk THROUGH when matching a released
-# frame against registered result plans. Deliberately ONLY the
-# column-reshaping wrappers the r4 hazard names (a ``.select`` /
-# ``.alias`` between operator return and release): a ``.limit()`` or
-# ``.filter()`` view is routinely built as a PREVIEW of a result the
-# caller still holds, and releasing such a preview must never yank
-# the live base's caches. Anything heavier (Aggregate, Join, Window)
-# is a genuinely new result and never matches.
-_TRANSPARENT_NODES = {
-    "Project",
-    "SubqueryAlias",
-}
+# Broadcast handles own() attached and nothing has released yet —
+# sweep_blocks' mop-up list (no block census can see a broadcast)
+_BROADCASTS: list = []
 
 
 def own(result: DataFrame, *backing: DataFrame) -> DataFrame:
@@ -109,13 +77,9 @@ def own(result: DataFrame, *backing: DataFrame) -> DataFrame:
         if b not in found:
             found.append(b)
     setattr(result, _ATTR, found)
-    try:
-        _REGISTRY.append(
-            (result._jdf.queryExecution().analyzed(), list(found))
-        )
-    except Exception:  # unanalyzable result: fast path only
-        pass
-    _prune()
+    _BROADCASTS.extend(
+        h for h in found if not hasattr(h, "_jdf") and h not in _BROADCASTS
+    )
     return result
 
 
@@ -130,14 +94,9 @@ def release_frame(cached: DataFrame) -> None:
         cached.unpersist()
     except Exception:  # already released / session gone
         pass
-    if not hasattr(cached, "_jdf"):
-        # duck-typed non-DataFrame handle (Broadcast): no storage
-        # census exists for it, so record the release explicitly —
-        # _is_live consults this marker
-        try:
-            setattr(cached, _RELEASED_ATTR, True)
-        except Exception:
-            pass
+    if not hasattr(cached, "_jdf"):  # Broadcast: nothing more to free
+        if cached in _BROADCASTS:
+            _BROADCASTS.remove(cached)
         return
     try:
         jlp = cached._jdf.logicalPlan()
@@ -148,7 +107,8 @@ def release_frame(cached: DataFrame) -> None:
 
 
 def release(*results: DataFrame) -> None:
-    """Release every cache attached to each result (idempotent).
+    """Release every cache attached to each result (idempotent: the
+    attribute is emptied, so a second call frees nothing).
 
     Semantics after release: a ``persist()``-backed plan simply
     recomputes on next action; a ``localCheckpoint``-backed plan is
@@ -156,93 +116,9 @@ def release(*results: DataFrame) -> None:
     checkpoint), so release only once the result is fully consumed.
     """
     for df in results:
-        # hasattr (not truthiness): an EMPTY attribute marks a frame
-        # already released (or owning nothing by construction) — the
-        # fallback must not run again for it, or a second release of
-        # the same wrapper could sameResult-match a LATER identical
-        # plan and free a live twin's caches.
-        if hasattr(df, _ATTR):
-            hs = list(getattr(df, _ATTR))
-        else:
-            hs = _find_registered(df)
-        for h in hs:
+        for h in getattr(df, _ATTR, ()):
             release_frame(h)
         setattr(df, _ATTR, [])
-    _prune()
-
-
-def _find_registered(df: DataFrame) -> list[DataFrame]:
-    """Wrapper-loss fallback: the released frame's analyzed plan,
-    stripped of transparent column-reshaping wrappers, ``sameResult``-
-    matched against registered RESULT plans. A ``.select``/``.alias``
-    between operator return and release sheds the ownership attribute
-    but leaves the result plan reachable through wrapper nodes; a
-    frame that merely *contains* an owned result deeper in its plan
-    (a limit/filter preview, an aggregate, a join) must not match —
-    releasing it would drop caches a live frame shares. The matched
-    entry is CONSUMED (removed from the registry), so one own() entry
-    can satisfy at most one fallback release."""
-    if not _REGISTRY:
-        return []
-    try:
-        node = df._jdf.queryExecution().analyzed()
-    except Exception:
-        return []
-    for _ in range(64):
-        for i, (rplan, hs) in enumerate(_REGISTRY):
-            try:
-                if node.sameResult(rplan):
-                    del _REGISTRY[i]
-                    return list(hs)
-            except Exception:
-                continue
-        try:
-            if node.getClass().getSimpleName() not in _TRANSPARENT_NODES:
-                break
-            ch = node.children()
-            if ch.size() != 1:
-                break
-            node = ch.apply(0)
-        except Exception:
-            break
-    return []
-
-
-def _is_live(h: DataFrame) -> bool:
-    """Does this handle still hold storage (CacheManager entry or a
-    persisted localCheckpoint RDD)? Non-DataFrame handles (a
-    Broadcast riding a result) expose no census API — they count as
-    live until release_frame stamps them released, so the registry
-    entry that would free them through the wrapper-loss fallback
-    survives pruning."""
-    if not hasattr(h, "_jdf"):
-        return hasattr(h, "unpersist") and not getattr(
-            h, _RELEASED_ATTR, False
-        )
-    try:
-        lvl = h.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return True
-    except Exception:
-        pass
-    try:
-        jlp = h._jdf.logicalPlan()
-        if jlp.getClass().getSimpleName() == "LogicalRDD":
-            sl = jlp.rdd().getStorageLevel()
-            return bool(sl.useMemory() or sl.useDisk())
-    except Exception:
-        pass
-    return False
-
-
-def _prune() -> None:
-    """Drop registry entries none of whose handles hold storage —
-    released here, via clearCache(), direct unpersist(), or session
-    teardown. Keeps the fallback search space bounded and prevents a
-    dead entry's plan from ever matching a future identical plan."""
-    _REGISTRY[:] = [
-        (p, hs) for p, hs in _REGISTRY if any(_is_live(h) for h in hs)
-    ]
 
 
 def sweep_blocks(spark, keep: frozenset | set | tuple = ()) -> None:
@@ -267,20 +143,13 @@ def sweep_blocks(spark, keep: frozenset | set | tuple = ()) -> None:
     for rid in list(jmap.keySet()):
         if rid not in keep:
             jmap.get(rid).unpersist()
-    # Broadcast mop-up (r14): a result swept by blocks rather than by
-    # release() may carry a non-DataFrame handle (a Broadcast riding
-    # it — the LSH gather-verify matrix, a large gate gram set) that
-    # no block census can see; once none of an entry's DataFrame
-    # handles hold storage, its broadcasts back nothing reachable and
-    # are released here so bench-style sweep-only callers cannot
-    # accumulate executor-side broadcast copies (or registry entries)
-    # across queries. Entries with a live kept frame are untouched.
-    for _p, hs in list(_REGISTRY):
-        if not any(_is_live(h) for h in hs if hasattr(h, "_jdf")):
-            for h in hs:
-                if not hasattr(h, "_jdf"):
-                    release_frame(h)
-    _prune()
+    # Broadcast mop-up: a result swept by blocks rather than by
+    # release() may carry a broadcast (the LSH gather-verify matrix, a
+    # large gate gram set) no block census sees. Unpersisting drops
+    # only the executor copies — a later use re-ships the value — so
+    # every listed broadcast is safe to drop here.
+    for h in list(_BROADCASTS):
+        release_frame(h)
 
 
 # Driver memory any one driver-side solve (connected components,

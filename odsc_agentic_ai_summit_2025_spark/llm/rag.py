@@ -41,6 +41,10 @@ from ..operators import fts, rrf
 from ..operators import similarity as sim
 from .client import LLMClient, MockLLMClient
 
+# notes fused into the vector context (the reference's default,
+# rag.py:80)
+TOP_K = 2
+
 
 @dataclass
 class HybridRagAnswer:
@@ -69,7 +73,6 @@ class HybridRag:
         graph,
         notes: DataFrame,
         client: LLMClient | None = None,
-        top_k: int = 2,  # reference default, rag.py:80
         collector=None,  # metering.UsageCollector → per-call metrics
         tracer=None,  # metering.SpanTracer → per-step spans
     ) -> None:
@@ -86,7 +89,6 @@ class HybridRag:
 
             tracer = SpanTracer()
         self.tracer = tracer
-        self.top_k = top_k
         self.schema_xml = fhir_graph_schema_xml(graph)
         graph.register(spark)
         # S8: embed-on-insert as an explicit column op; cache both
@@ -132,7 +134,7 @@ class HybridRag:
         fused = rrf.rrf_fuse(
             [bm.withColumnRenamed("doc_id", "record_id"), vec],
             id_col="record_id",
-            top_k=self.top_k,
+            top_k=TOP_K,
         )
         return fused.join(
             self.notes.select("record_id", "note"), "record_id"

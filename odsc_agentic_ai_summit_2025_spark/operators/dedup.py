@@ -520,6 +520,13 @@ def _gram_occurrences(
     shuffle payload, the smallest corpus-derived frame in the plan —
     callers attach it to their result (``own(..., per_pos)``) for the
     standard caller release.
+
+    A per-gram table built from ``per_pos`` is corpus-sized (one row
+    per distinct gram), so consumers join it back with a ``merge``
+    hint. Its size estimate ignores the explode fan-out (~12 MiB
+    planned for the ~10M grams of 300k 40-token docs), which put it
+    under the broadcast threshold: the driver then failed to build the
+    broadcast hash table in a 4017m heap (``scale_smoke.py 300000``).
     """
     from ..functions.text import tokens
 
@@ -578,7 +585,7 @@ def ngram_span_dupes(
     base, per_pos = _gram_occurrences(df, text_col, id_col, l)
     gram_tot = per_pos.groupBy("gram").agg(F.sum("_c").alias("_tot"))
     per_doc = (
-        per_pos.join(gram_tot, "gram")
+        per_pos.join(gram_tot.hint("merge"), "gram")
         .groupBy(id_col)
         .agg(
             F.sum("_c").alias("n_spans"),
@@ -645,7 +652,7 @@ def ngram_novelty(
         F.min(id_col).alias("_first")
     )
     per_doc = (
-        per_pos.join(first_owner, "gram")
+        per_pos.join(first_owner.hint("merge"), "gram")
         .groupBy(id_col)
         .agg(
             F.sum("_c").alias("n_grams"),

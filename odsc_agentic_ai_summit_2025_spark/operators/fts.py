@@ -121,23 +121,16 @@ def bm25_scores(
     text_col: str,
     id_col: str,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """BM25 score per document for a bag of query terms (builds a
     throwaway index; serve repeated queries from ``build_fts_index`` +
     ``bm25_scores_indexed``)."""
     return bm25_scores_indexed(
-        build_fts_index(docs, text_col, id_col), query_terms, k1, b
+        build_fts_index(docs, text_col, id_col), query_terms
     )
 
 
-def bm25_scores_indexed(
-    index: FtsIndex,
-    query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
+def bm25_scores_indexed(index: FtsIndex, query_terms: list[str]) -> DataFrame:
     """BM25 against a prebuilt index.
 
     N and avgdl are computed exactly (integer sum / integer count →
@@ -188,9 +181,9 @@ def bm25_scores_indexed(
         (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
         + F.lit(1.0)
     )
-    tf_norm = (F.col("tf") * F.lit(k1 + 1)) / (
+    tf_norm = (F.col("tf") * F.lit(K1 + 1)) / (
         F.col("tf")
-        + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+        + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
     )
     return (
         hit.withColumn("term_score", idf * tf_norm * qtf)

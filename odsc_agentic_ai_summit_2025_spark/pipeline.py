@@ -71,7 +71,6 @@ def build_rag_pipeline(
     client_factory=None,
     extracted: DataFrame | None = None,
     meter: bool = True,
-    top_k: int = 2,
 ) -> RagPipeline:
     """notes[record_id, note] → extraction → graph → hybrid RAG.
 
@@ -126,7 +125,6 @@ def build_rag_pipeline(
             graph,
             notes.selectExpr("record_id", "note"),
             client=client,
-            top_k=top_k,
             collector=collector,
             tracer=tracer,
         )

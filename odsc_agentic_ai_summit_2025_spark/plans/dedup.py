@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import own
 from ..functions.text import char_poly_hash_sql
 from ..operators import dedup as ops
 from ..operators import similarity as sim
@@ -81,17 +82,26 @@ def q66_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components, dedup_decisions
 
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    pairs = ops.jaccard_pairs(docs, "text", "doc_id", threshold=0.8)
     comp = connected_components(
-        pairs.select("a_id", "b_id"),
-        vertices=docs.select(F.col("doc_id").alias("id")),
+        _jaccard_edges(docs), vertices=docs.select(F.col("doc_id").alias("id"))
     )
-    return dedup_decisions(comp).select(
-        F.col("id").alias("doc_id"),
-        "cluster_id",
-        "keep",
-        F.col("cluster_size").cast("int").alias("cluster_size"),
+    dec = dedup_decisions(comp)
+    return own(
+        dec.select(
+            F.col("id").alias("doc_id"),
+            "cluster_id",
+            "keep",
+            F.col("cluster_size").cast("int").alias("cluster_size"),
+        ),
+        dec,
     )
+
+
+def _jaccard_edges(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """The q35 pair list stripped to its edge columns, re-owning the
+    generator's prefix cache so the consumer's result carries it."""
+    jp = ops.jaccard_pairs(docs, "text", "doc_id", threshold=threshold)
+    return own(jp.select("a_id", "b_id"), jp)
 
 
 # the q35 jaccard-pair CTEs over the bounded corpus, shared by the
@@ -137,20 +147,22 @@ def q99_quality_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    pairs = ops.jaccard_pairs(docs, "text", "doc_id", threshold=0.8)
     comp = connected_components(
-        pairs.select("a_id", "b_id"),
-        vertices=docs.select(F.col("doc_id").alias("id")),
+        _jaccard_edges(docs), vertices=docs.select(F.col("doc_id").alias("id"))
     )
     quality = tops.quality_score(docs, "text", "doc_id").select(
         F.col("doc_id").alias("id"), "quality_e4"
     )
-    return quality_representatives(comp, quality).select(
-        F.col("id").alias("doc_id"),
-        "cluster_id",
-        "quality_e4",
-        "keep",
-        F.col("cluster_size").cast("int").alias("cluster_size"),
+    reps = quality_representatives(comp, quality)
+    return own(
+        reps.select(
+            F.col("id").alias("doc_id"),
+            "cluster_id",
+            "quality_e4",
+            "keep",
+            F.col("cluster_size").cast("int").alias("cluster_size"),
+        ),
+        reps,
     )
 
 
@@ -344,14 +356,18 @@ def q82_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 1000
     )
-    return semantic_dedup(
+    dec = semantic_dedup(
         emb, "embedding", "vec_id", threshold=0.45,
         k_neighbors=10, k_clusters=8, nprobe=8,
-    ).select(
-        F.col("id").alias("vec_id"),
-        "cluster_id",
-        "keep",
-        F.col("cluster_size").cast("int").alias("cluster_size"),
+    )
+    return own(
+        dec.select(
+            F.col("id").alias("vec_id"),
+            "cluster_id",
+            "keep",
+            F.col("cluster_size").cast("int").alias("cluster_size"),
+        ),
+        dec,
     )
 
 
@@ -477,14 +493,11 @@ def _neardup_graph(spark: SparkSession, sf_dir: str):
     """The gate graph both analytics queries run on: Jaccard ≥ 0.5
     pairs within the first 200 docs (denser than q66's 0.8 graph so
     triangles exist), plus every doc as a vertex."""
-    from ..cache import own
-
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    jp = ops.jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
-    # re-attach the generator's prefix cache to the stripped edge list
-    # so the analytics result's release reaches it
-    pairs = own(jp.select("a_id", "b_id"), jp)
-    return pairs, docs.select(F.col("doc_id").alias("id"))
+    return (
+        _jaccard_edges(docs, threshold=0.5),
+        docs.select(F.col("doc_id").alias("id")),
+    )
 
 
 def q90_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,10 +506,8 @@ def q90_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each triangle enumerated once as a < b < c)."""
     from ..operators.components import triangle_counts
 
-    pairs, verts = _neardup_graph(spark, sf_dir)
-    return triangle_counts(pairs, verts).select(
-        F.col("id").alias("doc_id"), "n_triangles"
-    )
+    tri = triangle_counts(*_neardup_graph(spark, sf_dir))
+    return own(tri.select(F.col("id").alias("doc_id"), "n_triangles"), tri)
 
 
 Q90_SQL = f"""
@@ -524,10 +535,8 @@ def q91_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank, which float implementations can never be."""
     from ..operators.components import pagerank_fixed
 
-    pairs, verts = _neardup_graph(spark, sf_dir)
-    return pagerank_fixed(pairs, verts, iterations=3).select(
-        F.col("id").alias("doc_id"), "pr_e9"
-    )
+    pr = pagerank_fixed(*_neardup_graph(spark, sf_dir), iterations=3)
+    return own(pr.select(F.col("id").alias("doc_id"), "pr_e9"), pr)
 
 
 def _q91_iter_sql(prev: str, out: str) -> str:
@@ -795,7 +804,6 @@ def q112_neardup_index_lifecycle(
     # table is delivery-sized ([id, admitted, reason, n]), so an eager
     # checkpoint is broadcast-class storage; own() keeps admit A's
     # internal pins releasable through the checkpointed frame.
-    from ..cache import own
     admit_a = own(admit_a.localCheckpoint(eager=True), admit_a)
     admitted_a = delivery_a.join(
         admit_a.filter(F.col("admitted")).select("doc_id"), "doc_id"
@@ -818,8 +826,6 @@ def q112_neardup_index_lifecycle(
     # result frame, and the add's signature delta via idx2.bands'
     # inherited handle — release(result) (or bench's sweep) frees
     # the lot
-    from ..cache import own
-
     return own(
         final, admit_a, all_sigs, idx.bands, idx2.bands, census_1,
         idx2.delta_bands,

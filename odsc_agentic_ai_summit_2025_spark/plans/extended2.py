@@ -490,6 +490,38 @@ FROM hll JOIN ex USING (event_type)
 """
 
 
+def _stage_shards(df: DataFrame, key: str, n_shards: int, dest: str) -> None:
+    """Write ``df`` as ``dest/shard-<i>.parquet``, one file per
+    ``pmod(key, n_shards)`` value — one file per delivery, since the
+    replay streams read with maxFilesPerTrigger=1. ONE write job
+    stages all shards (r14): hash-partition by the shard key, then
+    partitionBy writes exactly one part file per shard value (each
+    value lives in exactly one task), where the r13 loop paid one
+    full scan + filter + write per shard. Rows are written
+    EXECUTOR-SIDE and the driver only renames finished files, so the
+    staging scales with the cluster, not driver memory."""
+    import os
+    import shutil
+
+    stage = f"{dest}/stage"
+    (
+        df.withColumn("_shard", F.pmod(key, n_shards))
+        .repartition(n_shards, "_shard")
+        .write.partitionBy("_shard")
+        .parquet(stage)
+    )
+    for name in os.listdir(stage):
+        if not name.startswith("_shard="):
+            continue
+        i = int(name.split("=", 1)[1])
+        part = next(
+            p for p in os.listdir(f"{stage}/{name}")
+            if p.startswith("part-") and p.endswith(".parquet")
+        )
+        os.rename(f"{stage}/{name}/{part}", f"{dest}/shard-{i}.parquet")
+    shutil.rmtree(stage, ignore_errors=True)
+
+
 # ---------------------------------------------------------------------------
 # q113 — the streaming tier surfaced as a driver-oracled query
 # (VERDICT r10 #5): replay the events table as three one-file
@@ -503,17 +535,16 @@ FROM hll JOIN ex USING (event_type)
 # ---------------------------------------------------------------------------
 
 def q113_hll_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
+    from ..cache import own
     from ..operators.sketches import hll_estimate_registers
     from ..streaming.pipeline import hll_register_stream
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    n_shards = 3
     d = tempfile.mkdtemp(prefix="q113_hll_replay_")
     # MICROS, not the INT96 default: INT96 footers read back as
     # nanoseconds under pyarrow, which would flip the stream reader's
@@ -524,36 +555,9 @@ def q113_hll_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set(_ts_key, "TIMESTAMP_MICROS")
     try:
         try:
-            # one FILE per delivery: maxFilesPerTrigger=1 makes file
-            # count == micro-batch count (order is irrelevant — the
-            # max-merge is commutative and merge ≡ refit). ONE write
-            # job stages all shards (r14, guide §6): hash-partition
-            # by the shard key, then partitionBy writes exactly one
-            # part file per shard value (each value lives in exactly
-            # one task), where the r13 loop paid one full scan +
-            # filter + write per shard. Shards are written
-            # EXECUTOR-SIDE; the driver only renames finished files —
-            # events rows never cross the driver, so the replay setup
-            # scales with the cluster, not driver memory.
-            stage = f"{d}/stage"
-            (
-                ev.withColumn("_shard", F.pmod("event_id", n_shards))
-                .repartition(n_shards, "_shard")
-                .write.partitionBy("_shard")
-                .parquet(stage)
-            )
-            for name in os.listdir(stage):
-                if not name.startswith("_shard="):
-                    continue
-                i = int(name.split("=", 1)[1])
-                part = next(
-                    p for p in os.listdir(f"{stage}/{name}")
-                    if p.startswith("part-") and p.endswith(".parquet")
-                )
-                os.rename(
-                    f"{stage}/{name}/{part}", f"{d}/shard-{i}.parquet"
-                )
-            shutil.rmtree(stage, ignore_errors=True)
+            # order is irrelevant: the max-merge is commutative and
+            # merge ≡ refit
+            _stage_shards(ev, "event_id", 3, d)
         finally:
             if _ts_prev is None:
                 spark.conf.unset(_ts_key)
@@ -585,8 +589,12 @@ def q113_hll_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users_exact")
     )
-    return est.join(exact, "event_type").select(
-        "event_type", "n_users_approx", "n_users_exact"
+    # the standing registers back the estimate: they ride the result
+    return own(
+        est.join(exact, "event_type").select(
+            "event_type", "n_users_approx", "n_users_exact"
+        ),
+        regs,
     )
 
 
@@ -623,7 +631,7 @@ def q114_dsir_stream_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..cache import release_frame
+    from ..cache import own, release_frame
     from ..operators.curation import dsir_model
     from ..streaming.pipeline import dsir_score_stream
 
@@ -631,37 +639,12 @@ def q114_dsir_stream_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = dsir_model(
         docs.filter(F.col("doc_id") < 250), "text", "source", "src1", n=2
     )
-    n_shards = 3
     d = tempfile.mkdtemp(prefix="q114_dsir_stream_")
     try:
         in_dir = f"{d}/in"
         out_dir = f"{d}/out"
         os.mkdir(in_dir)
-        # one FILE per delivery (maxFilesPerTrigger=1 in the stream
-        # makes file count == micro-batch count), staged by ONE write
-        # job exactly like q113's replay shards (r14, guide §6):
-        # hash-partition by the shard key, partitionBy emits one part
-        # file per shard value, the driver only renames finished
-        # files — document text never crosses the driver.
-        stage = f"{in_dir}/stage"
-        (
-            docs.withColumn("_shard", F.pmod("doc_id", n_shards))
-            .repartition(n_shards, "_shard")
-            .write.partitionBy("_shard")
-            .parquet(stage)
-        )
-        for name in os.listdir(stage):
-            if not name.startswith("_shard="):
-                continue
-            i = int(name.split("=", 1)[1])
-            part = next(
-                p for p in os.listdir(f"{stage}/{name}")
-                if p.startswith("part-") and p.endswith(".parquet")
-            )
-            os.rename(
-                f"{stage}/{name}/{part}", f"{in_dir}/shard-{i}.parquet"
-            )
-        shutil.rmtree(stage, ignore_errors=True)
+        _stage_shards(docs, "doc_id", 3, in_dir)
 
         def _sink(scored: DataFrame, batch_id: int) -> None:
             # append-mode parquet from inside foreachBatch: the
@@ -681,8 +664,10 @@ def q114_dsir_stream_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the stream pinned the model for its per-batch joins
             release_frame(q.dsirModelHandle)
         # eager checkpoint so the result survives the rmtree below
-        # (3 small columns per doc — the text stayed in the shards)
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        # (3 small columns per doc — the text stayed in the shards);
+        # own(x, x): the frame is its own release handle
+        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        return own(out, out)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -52,6 +52,7 @@ _CHANGED = (
     "q91_pagerank",
     "q99_quality_reps",
     "q100_curation_pipeline",
+    "q113_hll_stream_replay",
     "q114_dsir_stream_scoring",
 )
 

@@ -741,33 +741,21 @@ def _incremental_fold_stream(stream, state_key, build_delta, merge, sink):
     pinned shard algebra). Returns ``(query, state, fold)`` with the
     standing frame at ``state[state_key]``.
     """
-    from .. import cache
-
     state: dict = {state_key: None, "last_batch_id": None}
+    sink = sink or (lambda _df, _batch_id: None)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if state["last_batch_id"] is not None and (
-            batch_id <= state["last_batch_id"]
-        ):
+        if _redelivered(state, batch_id):
             return
         delta = build_delta(batch_df)
-        merged = (
-            merge(state[state_key], delta)
-            if state[state_key] is not None
-            else delta
+        standing = state[state_key]
+        _commit_fold(
+            state,
+            state_key,
+            batch_id,
+            delta if standing is None else merge(standing, delta),
+            lambda new_frame: sink(new_frame, batch_id),
         )
-        prev = state[state_key]
-        new_frame = merged.localCheckpoint(eager=True)
-        if sink is not None:
-            try:
-                sink(new_frame, batch_id)
-            except BaseException:
-                cache.release_frame(new_frame)
-                raise
-        state[state_key] = new_frame
-        state["last_batch_id"] = batch_id
-        if prev is not None:
-            cache.release_frame(prev)
 
     query = (
         stream.writeStream.foreachBatch(_fold)
@@ -775,6 +763,32 @@ def _incremental_fold_stream(stream, state_key, build_delta, merge, sink):
         .start()
     )
     return query, state, _fold
+
+
+def _redelivered(state: dict, batch_id: int) -> bool:
+    """The idempotence guard: has this batch_id already committed?"""
+    last = state["last_batch_id"]
+    return last is not None and batch_id <= last
+
+
+def _commit_fold(state, state_key, batch_id, merged, deliver) -> None:
+    """Checkpoint ``merged`` as the new standing frame and commit it
+    sink-first: ``deliver(new_frame)`` runs before the commit; if it
+    raises, the new checkpoint is released and the state is unchanged.
+    The previous frame is released only after the commit."""
+    from .. import cache
+
+    prev = state[state_key]
+    new_frame = merged.localCheckpoint(eager=True)
+    try:
+        deliver(new_frame)
+    except BaseException:
+        cache.release_frame(new_frame)
+        raise
+    state[state_key] = new_frame
+    state["last_batch_id"] = batch_id
+    if prev is not None:
+        cache.release_frame(prev)
 
 
 def dsir_model_cms_stream(
@@ -1028,6 +1042,15 @@ def ngram_novelty_stream(
     for a mined-out gate, which acts on LOW novelty.
     ``sink(df, batch_id)`` must materialize what it is given.
 
+    Delivery contract as :func:`_incremental_fold_stream`: a
+    redelivered batch_id is skipped (its grams are already in the
+    standing set, so re-scoring it would report them all as seen),
+    and the sink runs BEFORE the new standing set commits, so a sink
+    failure leaves the batch re-scorable on redelivery. The final set
+    is at ``query.ngramNoveltyState["owners"]`` (release via
+    ``cache.release_frame``); ``query.ngramNoveltyFold`` is the
+    per-batch callback.
+
     Returns the started StreamingQuery (availableNow trigger).
     """
     from .. import cache
@@ -1036,7 +1059,7 @@ def ngram_novelty_stream(
     stream = _docs_stream(
         spark, docs_path, max_files_per_trigger=max_files_per_trigger
     )
-    state: dict = {"owners": None}
+    state: dict = {"owners": None, "last_batch_id": None}
 
     def _seen_marks(grams: DataFrame) -> DataFrame:
         """``[gram, _seen]`` for this batch's distinct grams, from
@@ -1052,6 +1075,8 @@ def ngram_novelty_stream(
         return state["owners"].withColumn("_seen", F.lit(True))
 
     def _score(batch_df: DataFrame, batch_id: int) -> None:
+        if _redelivered(state, batch_id):
+            return
         base, per_pos = _gram_occurrences(batch_df, "text", "doc_id", l)
         bmin = per_pos.groupBy("gram").agg(F.min("doc_id").alias("_bmin"))
         scored = per_pos.join(bmin, "gram").join(
@@ -1084,7 +1109,6 @@ def ngram_novelty_stream(
             )
         )
         try:
-            sink(out, batch_id)
             # fold this batch's grams into the standing structure; the
             # checkpoint truncates lineage so state does not grow a
             # union chain across batches
@@ -1108,18 +1132,22 @@ def ngram_novelty_stream(
                     if state["owners"] is not None
                     else new_grams
                 )
-            prev = state["owners"]
-            state["owners"] = merged.localCheckpoint()
-            if prev is not None:
-                cache.release_frame(prev)
+            # the sink reads the standing set the commit replaces
+            _commit_fold(
+                state, "owners", batch_id, merged,
+                lambda _new: sink(out, batch_id),
+            )
         finally:
             cache.release_frame(per_pos)
 
-    return (
+    query = (
         stream.writeStream.foreachBatch(_score)
         .trigger(availableNow=True)
         .start()
     )
+    query.ngramNoveltyState = state
+    query.ngramNoveltyFold = _score
+    return query
 
 
 def _interval_seconds(interval: str) -> int:

@@ -260,32 +260,6 @@ def test_cms_model_merges_across_shards(spark, sf_dir):
     assert a == b
 
 
-def test_gate_broadcast_releases_through_wrapper_loss_fallback(spark, sf_dir):
-    """The r6 ADVICE scenario, repaired in r7: a .select between the
-    gate and release sheds the ownership attribute, so release() must
-    find the broadcast through the registry fallback — which only
-    works if _is_live counts the un-released Broadcast handle as
-    live (it previously pruned the entry immediately)."""
-    from odsc_agentic_ai_summit_2025_spark import cache
-    from odsc_agentic_ai_summit_2025_spark.operators.curation import (
-        benchmark_gram_set,
-        ingest_gate,
-    )
-
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    grams = benchmark_gram_set(bench, "text", n=3)
-    n_reg = len(cache._REGISTRY)
-    out = ingest_gate(corpus, grams, "text", "doc_id", literal_max=0)
-    wrapped = out.select("doc_id", "admit")  # sheds the attribute
-    assert not hasattr(wrapped, cache._ATTR)
-    wrapped.count()
-    assert len(cache._REGISTRY) == n_reg + 1  # broadcast entry live
-    cache.release(wrapped)  # fallback: plan-match through Project
-    assert len(cache._REGISTRY) == n_reg  # consumed + pruned
-
-
 def test_dsir_cms_stream_sink_failure_keeps_at_least_once(
     spark, sf_dir, tmp_path
 ):

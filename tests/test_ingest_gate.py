@@ -248,6 +248,29 @@ def test_weighted_resample_stream_parity(spark, sf_dir, docs_stream_dir2):
     )
 
 
+def _novelty_shards(spark, sf_dir, tmp_path):
+    """The first 300 docs as three 100-doc parquet deliveries in
+    doc_id order: ``(docs, directory)``."""
+    import os
+    import time
+
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    d = tmp_path / "novelty_stream_in"
+    d.mkdir()
+    now = time.time()
+    for i in range(3):
+        p = d / f"shard-{i}.parquet"
+        docs.filter(
+            (F.col("doc_id") >= 100 * i) & (F.col("doc_id") < 100 * (i + 1))
+        ).select("doc_id", "text", "lang", "source", "n_chars").toPandas(
+        ).to_parquet(p, index=False)
+        # the id-increases-with-delivery invariant needs shard-order
+        # ingestion; pin distinct mtimes so the file source's listing
+        # order is deterministic
+        os.utime(p, (now + i, now + i))
+    return docs, str(d)
+
+
 def test_ngram_novelty_stream_standing_set_parity(spark, sf_dir, tmp_path):
     """Incremental novelty against the accumulated gram set must
     equal the batch operator over the concatenated corpus when
@@ -258,27 +281,7 @@ def test_ngram_novelty_stream_standing_set_parity(spark, sf_dir, tmp_path):
         ngram_novelty_stream,
     )
 
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    shards = [
-        docs.filter(
-            (F.col("doc_id") >= 100 * i) & (F.col("doc_id") < 100 * (i + 1))
-        ).select("doc_id", "text", "lang", "source", "n_chars")
-        for i in range(3)
-    ]
-    d = tmp_path / "novelty_stream_in"
-    d.mkdir()
-    import os as _os
-    import time as _time
-
-    now = _time.time()
-    for i, s in enumerate(shards):
-        p = d / f"shard-{i}.parquet"
-        s.toPandas().to_parquet(p, index=False)
-        # the id-increases-with-delivery invariant needs shard-order
-        # ingestion; pin distinct mtimes so the file source's listing
-        # order is deterministic
-        _os.utime(p, (now + i, now + i))
-
+    docs, d = _novelty_shards(spark, sf_dir, tmp_path)
     got = []
 
     def sink(df, batch_id):
@@ -287,7 +290,7 @@ def test_ngram_novelty_stream_standing_set_parity(spark, sf_dir, tmp_path):
             for r in df.collect()
         )
 
-    q = ngram_novelty_stream(spark, str(d), sink, l=8)
+    q = ngram_novelty_stream(spark, d, sink, l=8)
     q.awaitTermination(120)
 
     from odsc_agentic_ai_summit_2025_spark import cache
@@ -296,6 +299,48 @@ def test_ngram_novelty_stream_standing_set_parity(spark, sf_dir, tmp_path):
     want = sorted(map(tuple, batch.collect()))
     cache.release(batch)
     assert sorted(got) == want and len(want) > 0
+
+
+def test_ngram_novelty_stream_redelivery_is_a_no_op(spark, sf_dir, tmp_path):
+    """foreachBatch is at-least-once: a redelivered batch_id must leave
+    the sink rows and the standing gram set unchanged (re-scored, its
+    grams would all read as seen and every doc would sink n_novel=0),
+    and releasing the exposed final set returns the block census to
+    its baseline."""
+    import gc
+
+    from odsc_agentic_ai_summit_2025_spark.cache import release_frame
+    from odsc_agentic_ai_summit_2025_spark.streaming.pipeline import (
+        ngram_novelty_stream,
+    )
+
+    _, d = _novelty_shards(spark, sf_dir, tmp_path)
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    gc.collect()
+    for jrdd in list(dict(jsc.getPersistentRDDs()).values()):
+        jrdd.unpersist()
+    baseline = jsc.getPersistentRDDs().size()
+
+    got = []
+
+    def sink(df, batch_id):
+        got.extend(map(tuple, df.collect()))
+
+    q = ngram_novelty_stream(spark, d, sink, l=8)
+    q.awaitTermination(120)
+    state = q.ngramNoveltyState
+    last, owners = state["last_batch_id"], state["owners"]
+    rows, n_owned = list(got), owners.count()
+    assert any(r[2] > 0 for r in rows)  # novel grams were scored
+
+    q.ngramNoveltyFold(spark.read.parquet(f"{d}/shard-2.parquet"), last)
+    assert got == rows
+    assert state["owners"] is owners and owners.count() == n_owned
+    assert state["last_batch_id"] == last
+
+    release_frame(state["owners"])
+    assert jsc.getPersistentRDDs().size() == baseline
 
 
 def test_ngram_novelty_stream_sketch_bounded(spark, sf_dir, tmp_path):
@@ -307,23 +352,7 @@ def test_ngram_novelty_stream_sketch_bounded(spark, sf_dir, tmp_path):
         ngram_novelty_stream,
     )
 
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    shards = [
-        docs.filter(
-            (F.col("doc_id") >= 100 * i) & (F.col("doc_id") < 100 * (i + 1))
-        ).select("doc_id", "text", "lang", "source", "n_chars")
-        for i in range(3)
-    ]
-    import os as _os
-    import time as _time
-
-    d = tmp_path / "novelty_sketch_in"
-    d.mkdir()
-    now = _time.time()
-    for i, s in enumerate(shards):
-        p = d / f"shard-{i}.parquet"
-        s.toPandas().to_parquet(p, index=False)
-        _os.utime(p, (now + i, now + i))
+    _, d = _novelty_shards(spark, sf_dir, tmp_path)
 
     def run(sketch):
         got = {}
@@ -332,7 +361,7 @@ def test_ngram_novelty_stream_sketch_bounded(spark, sf_dir, tmp_path):
             for r in df.collect():
                 got[r["doc_id"]] = (r["n_grams"], r["n_novel"])
 
-        q = ngram_novelty_stream(spark, str(d), sink, l=8, sketch=sketch)
+        q = ngram_novelty_stream(spark, d, sink, l=8, sketch=sketch)
         q.awaitTermination(120)
         return got
 
@@ -451,14 +480,15 @@ def test_ingest_gate_kernel_path_matches_literal(spark, sf_dir):
     )
     # literal_max=0 forces the broadcast set-membership kernel; its
     # broadcast rides the frame as a release handle, so release it
-    # like any pipeline caller would (the handle now counts as LIVE
-    # in the cache registry until released — r7 _is_live fix)
-    n_reg = len(cache._REGISTRY)
+    # like any pipeline caller would: release drops it from the
+    # broadcast list sweep_blocks would otherwise mop up
+    n_bc = len(cache._BROADCASTS)
     kern_df = ingest_gate(corpus, grams, "text", "doc_id", literal_max=0)
     kern = sorted(map(tuple, kern_df.collect()))
-    assert len(cache._REGISTRY) == n_reg + 1  # broadcast handle is live
+    assert len(cache._BROADCASTS) == n_bc + 1
+    assert cache.handles(kern_df)[-1] in cache._BROADCASTS
     cache.release(kern_df)
-    assert len(cache._REGISTRY) == n_reg  # released + pruned
+    assert len(cache._BROADCASTS) == n_bc
     assert kern == lit
     assert any(r[3] for r in lit)  # some contaminated rows exercised
 

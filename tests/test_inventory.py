@@ -1,13 +1,16 @@
 """Run every declared query against the DuckDB oracle at the small SF.
 
 This mirrors the driver's t2 correctness gate (CORRECTNESS_r{N}.json):
-row-count + column-name + order-insensitive value comparison.
+row-count + column-name + order-insensitive value comparison. It also
+holds every query to the cache rule (``cache.py``): releasing the
+returned frame frees every block the query pinned.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from odsc_agentic_ai_summit_2025_spark.cache import release
 from odsc_agentic_ai_summit_2025_spark.plans.oracle import (
     compare,
     duckdb_connect,
@@ -25,14 +28,19 @@ def oracle_con(sf_dir):
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     q = QUERIES[name]
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keySet())
     df = q.spark(spark, sf_dir)
     if q.oracle is None:
         # rows-only contract: must execute and return a stable schema
         assert df.count() >= 0
         assert len(df.columns) > 0
-        return
-    ok, detail = compare(df, oracle_con, q.oracle)
-    assert ok, f"{name}: {detail}"
+    else:
+        ok, detail = compare(df, oracle_con, q.oracle)
+        assert ok, f"{name}: {detail}"
+    release(df)
+    left = set(pinned().keySet()) - before
+    assert not left, f"{name}: RDD(s) {sorted(left)} left pinned"
 
 
 # ---------------------------------------------------------------------------
